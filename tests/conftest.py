@@ -8,6 +8,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+_SLOW_SKIP_REASON = "slow tier; run with SPARK_GRAFT_FULL_TESTS=1 or -m slow"
 
 
 def pytest_configure(config):
@@ -27,12 +28,24 @@ def pytest_collection_modifyitems(config, items):
         return
     if config.getoption("-m"):
         return  # an explicit marker expression overrides the default skip
-    skip = pytest.mark.skip(
-        reason="slow tier; run with SPARK_GRAFT_FULL_TESTS=1 or -m slow"
-    )
+    skip = pytest.mark.skip(reason=_SLOW_SKIP_REASON)
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how many slow tests the default run skipped, so the tier that
+    did not run stays visible in every summary."""
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and rep.longrepr[2].endswith(
+            _SLOW_SKIP_REASON
+        )
+    )
+    if n:
+        terminalreporter.write_line(f"{n} tests auto-skipped: {_SLOW_SKIP_REASON}")
 
 
 @pytest.fixture(scope="session")

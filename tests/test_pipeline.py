@@ -526,6 +526,47 @@ def test_reference_view_ddl_refreshes_on_relocation(spark, tmp_path):
     assert root2 in content and root1 not in content
 
 
+def test_stage_timer_concurrent_spans_lose_no_time():
+    """Pool threads record spans on one ``_StageTimer`` at once. The
+    read-modify-write of ``timings`` must hold its lock: a ``get`` that
+    yields the GIL mid-update would otherwise let threads overwrite each
+    other's additions, and the total would fall far below the time spent."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tickerlake_spark.pipeline import _StageTimer
+
+    class _YieldingDict(dict):
+        def get(self, *args):
+            value = super().get(*args)
+            time.sleep(0.001)  # invite a concurrent writer in
+            return value
+
+    timer = _StageTimer()
+    timer.timings = _YieldingDict()
+    n_threads, spans, nap = 8, 5, 0.02
+    start = threading.Barrier(n_threads)
+
+    def work():
+        start.wait(timeout=60)
+        for _ in range(spans):
+            with timer.span("stage"):
+                time.sleep(nap)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            for f in [pool.submit(work) for _ in range(n_threads)]:
+                f.result(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    # each addition rounds to the millisecond: at most 0.5 ms lost per span
+    assert timer.timings["stage"] >= n_threads * spans * (nap - 0.0005)
+
+
 def test_validate_detects_indicator_drift(spark, env):
     """run_validate's third check recomputes sampled tickers' indicators
     from scratch and diffs stored rows — clean data passes, a tampered

@@ -206,8 +206,9 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         if args.cmd == "curate":
             from tickerlake_spark.curation_pipeline import run_curation
+            from tickerlake_spark.storage.io import read_table
 
-            docs = spark.read.parquet(args.input)
+            docs = read_table(spark, args.input)
             stats = run_curation(
                 spark,
                 docs,

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tickerlake_spark.storage import table_exists, write_table
+from tickerlake_spark.storage import read_table, table_exists, write_table
 from tickerlake_spark.storage.fs import FS, LOCAL_FS
 from tickerlake_spark.storage.maintenance import compact_partition_dirs
 
@@ -143,7 +143,7 @@ def repair_closes_extract(
 
     repair_partition_swaps(path, fs=fs)
     wm = F.lit(watermark).cast("date")
-    ext = spark.read.parquet(path)
+    ext = read_table(spark, path, fs=fs)
     touched = sorted(
         r[0] for r in ext.filter(F.col("date") > wm).select("tb").distinct().collect()
     )
@@ -152,7 +152,7 @@ def repair_closes_extract(
         _n, total = table_file_stats(part_dir, fs=fs)
         n_out = max(1, math.ceil(total / (64 * 1024 * 1024)))
         kept = (
-            spark.read.parquet(part_dir)
+            read_table(spark, part_dir, fs=fs)
             .filter(F.col("date") <= wm)
             .coalesce(n_out)
             .sortWithinPartitions("ticker", "date")
@@ -194,7 +194,7 @@ def read_closes_for(
         }
     )
     return (
-        spark.read.parquet(path)
+        read_table(spark, path, fs=fs)
         .filter(F.col("tb").isin(buckets) & F.col("ticker").isin(affected))
         .select("ticker", "date", "close")
     )

@@ -332,7 +332,7 @@ def _assert_canonical_layout(spark, path: str, fs=None) -> None:
     (count of src > dst rows); clean tables get the marker so the scan
     never repeats, dirty ones raise with the rebuild instruction.
     """
-    from tickerlake_spark.storage import table_exists
+    from tickerlake_spark.storage import read_table, table_exists
     from tickerlake_spark.storage.fs import LOCAL_FS
 
     fs = fs if fs is not None else LOCAL_FS
@@ -341,7 +341,7 @@ def _assert_canonical_layout(spark, path: str, fs=None) -> None:
     if fs.isfile(f"{path.rstrip('/')}/{_EDGE_LAYOUT_MARKER}"):
         return
     bad = (
-        spark.read.parquet(path)
+        read_table(spark, path, fs=fs)
         .filter(F.col("src") > F.col("dst"))
         .limit(1)
         .count()
@@ -361,7 +361,9 @@ def read_edges(spark, path: str, symmetrize: bool = True) -> DataFrame:
     """The maintained edge table as a plain (src, dst) frame; by default
     both directions of every stored undirected edge (one scan, lazy union —
     the shape pagerank/components expect)."""
-    stored = spark.read.parquet(path).select("src", "dst")
+    from tickerlake_spark.storage import read_table
+
+    stored = read_table(spark, path).select("src", "dst")
     if not symmetrize:
         return stored
     return stored.unionByName(

@@ -20,6 +20,7 @@ than the watermark (reference: silver/incremental.py:20-107).
 from __future__ import annotations
 
 import datetime as dt
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -101,18 +102,24 @@ def _bucket_start(period: str, d: dt.date) -> dt.date:
 class _StageTimer:
     """Wall-clock per stage, returned in job summaries so e2e benchmarks can
     attribute full-build cost per table instead of guessing (VERDICT r7:
-    10x silver-full variance across boxes was undiagnosable without this)."""
+    10x silver-full variance across boxes was undiagnosable without this).
+    Pool threads record spans concurrently, so every update of ``timings``
+    holds the lock."""
 
     def __init__(self) -> None:
         self.timings: dict[str, float] = {}
         self._last = time.perf_counter()
+        self._lock = threading.Lock()
+
+    def _add(self, name: str, seconds: float) -> None:
+        with self._lock:
+            self.timings[name] = round(self.timings.get(name, 0.0) + seconds, 3)
 
     def mark(self, name: str) -> None:
-        now = time.perf_counter()
-        self.timings[name] = round(
-            self.timings.get(name, 0.0) + (now - self._last), 3
-        )
-        self._last = now
+        with self._lock:
+            now = time.perf_counter()
+            seconds, self._last = now - self._last, now
+        self._add(name, seconds)
 
     def span(self, name: str):
         """Context manager measuring an explicit duration — the thread-safe
@@ -126,9 +133,7 @@ class _StageTimer:
             try:
                 yield
             finally:
-                self.timings[name] = round(
-                    self.timings.get(name, 0.0) + (time.perf_counter() - t0), 3
-                )
+                self._add(name, time.perf_counter() - t0)
 
         return _cm()
 
@@ -276,9 +281,19 @@ def should_full_rewrite(
     (recorded by ``run_silver``) forces the full rewrite; the reference's
     date check remains as the fallback when no fingerprint was recorded.
     """
+    return _rewrite_gate(spark, catalog, checkpoints)[0]
+
+
+def _rewrite_gate(
+    spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints | None
+) -> tuple[bool, dict[str, str | None]]:
+    """``should_full_rewrite``'s decision plus the fingerprints it computed
+    on the way, keyed by checkpoint name, so ``run_silver`` records the
+    values the gate compared instead of recomputing them at commit."""
+    seen: dict[str, str | None] = {}
     daily_path = catalog.silver("daily_aggregates")
     if not table_exists(daily_path, fs=catalog.fs):
-        return True
+        return True, seen
     # migration guard: a lake written before silver was date-partitioned has
     # root-level part files; appending date=.../ dirs next to them would
     # corrupt the layout (Spark: 'Conflicting directory structures') and the
@@ -287,10 +302,10 @@ def should_full_rewrite(
     from tickerlake_spark.storage import detect_partition_column
 
     if detect_partition_column(daily_path, fs=catalog.fs) != "date":
-        return True
+        return True, seen
     max_silver = get_max_date(spark, daily_path, fs=catalog.fs)
     if max_silver is None:
-        return True
+        return True, seen
     if checkpoints is not None:
         # a changed CS/ETF universe (ticker reclassified in or out) stales
         # history exactly like a late split: the append path can only admit
@@ -298,23 +313,46 @@ def should_full_rewrite(
         # stay wrong forever without a rewrite. Checked BEFORE the
         # splits-table gate — universe changes are orthogonal to splits.
         rec_universe = checkpoints.get("silver_universe_fingerprint")
-        if (
-            rec_universe is not None
-            and _universe_fingerprint(spark, catalog) != rec_universe
-        ):
-            return True
+        if rec_universe is not None:
+            fp = seen["silver_universe_fingerprint"] = _universe_fingerprint(
+                spark, catalog
+            )
+            if fp != rec_universe:
+                return True, seen
     if not table_exists(catalog.bronze("splits"), fs=catalog.fs):
-        return False
+        return False, seen
     if checkpoints is not None:
         recorded = checkpoints.get("silver_splits_fingerprint")
         if recorded is not None:
-            return _splits_fingerprint(spark, catalog) != recorded
+            fp = seen["silver_splits_fingerprint"] = _splits_fingerprint(
+                spark, catalog
+            )
+            return fp != recorded, seen
     n_new = (
         read_table(spark, catalog.bronze("splits"), fs=catalog.fs)
         .filter(F.col("execution_date") > F.lit(max_silver).cast("date"))
         .count()
     )
-    return n_new > 0
+    return n_new > 0, seen
+
+
+def _record_fingerprints(
+    spark: SparkSession,
+    catalog: Catalog,
+    checkpoints: Checkpoints,
+    seen: dict[str, str | None],
+) -> None:
+    """Record the splits and universe fingerprints at a silver commit: the
+    gate's own value where it computed one (a splits change that lands
+    mid-run then stays unapplied and forces the next rewrite), else a fresh
+    computation."""
+    for key, fingerprint in (
+        ("silver_splits_fingerprint", _splits_fingerprint),
+        ("silver_universe_fingerprint", _universe_fingerprint),
+    ):
+        checkpoints.set(
+            key, seen[key] if key in seen else fingerprint(spark, catalog)
+        )
 
 
 def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) -> dict:
@@ -362,7 +400,7 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
         )
         stocks = stocks.join(F.broadcast(universe), "ticker", "left_semi")
 
-    full = should_full_rewrite(spark, catalog, checkpoints)
+    full, fingerprints = _rewrite_gate(spark, catalog, checkpoints)
     mode = "overwrite"
     if not full:
         watermark = get_max_date(
@@ -488,12 +526,7 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
                 f.result()
         timer.mark("full_parallel_wall")
         checkpoints.set("silver_last_full_rewrite", dt.date.today().isoformat())
-        checkpoints.set(
-            "silver_splits_fingerprint", _splits_fingerprint(spark, catalog)
-        )
-        checkpoints.set(
-            "silver_universe_fingerprint", _universe_fingerprint(spark, catalog)
-        )
+        _record_fingerprints(spark, catalog, checkpoints, fingerprints)
         checkpoints.set("silver_last_mode", "full")
         # generation counter: every full rewrite invalidates ALL downstream
         # gold history; gold compares this against the generation it last
@@ -603,6 +636,7 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
             keys=["ticker", "date"],
             partition_by="date",  # rewrites only the touched bucket partitions
             validate_unique=False,  # (ticker, bucket) unique by construction
+            with_count=False,  # the summary is discarded: skip the action
             fs=catalog.fs,
         )
         bucket_since = _bucket_start(period, wm)
@@ -620,6 +654,7 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
             keys=["ticker", "date"],
             partition_by="date",
             validate_unique=False,
+            with_count=False,
             fs=catalog.fs,
         )
         new_tails[period] = advance_tail(ctx, delta_stored)
@@ -659,10 +694,7 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
     # crash mid-way leaves a mismatched as_of and the next run falls back
     # + rebuilds (unchanged crash contract)
     checkpoints.set("silver_tail_as_of", new_wm_iso)
-    checkpoints.set("silver_splits_fingerprint", _splits_fingerprint(spark, catalog))
-    checkpoints.set(
-        "silver_universe_fingerprint", _universe_fingerprint(spark, catalog)
-    )
+    _record_fingerprints(spark, catalog, checkpoints, fingerprints)
     checkpoints.set("silver_last_mode", "append")
     timer.mark("checkpoints")
     return {"mode": "append", "timings": timer.timings}

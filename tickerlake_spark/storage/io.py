@@ -13,9 +13,24 @@ Spark-first rebuild of the reference's storage operations
 - ``dynamic`` partition overwrite replaces only the partitions present in the
   incoming frame — the scalable equivalent of the reference's
   read-concat-rewrite loop (bronze/main.py:245-253).
+
+Read contract (``read_table``): no table read runs a Spark job to learn a
+schema. Snapshot tables take theirs from the manifest (``snap_read``).
+Hive-layout tables take theirs from the Parquet footer of their first data
+file: Spark writes the exact Catalyst schema into every footer under
+``org.apache.spark.sql.parquet.row.metadata`` and its own inference returns
+that value whenever it is present, so one footer tail read in this
+process replaces the inference job a bare ``spark.read.parquet`` launches. Partition columns
+are still discovered from the directory names. When the table has no data
+file, the footer lacks the key (a foreign writer such as pyarrow) or its
+JSON does not parse, the read falls back to Spark's inference — so a
+missing or empty table raises exactly what ``spark.read.parquet`` raises.
 """
 
 from __future__ import annotations
+
+import json
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +40,7 @@ from tickerlake_spark.storage.fs import FS, LOCAL_FS
 
 __all__ = [
     "read_table",
+    "footer_schema",
     "parquet_footer_metadata",
     "write_table",
     "init_table",
@@ -47,13 +63,36 @@ def read_table(spark: SparkSession, path: str, fs: FS = LOCAL_FS) -> DataFrame:
 
     Partition-column recovery and partition pruning are native on the
     Hive layout; snapshot reads prune via manifest stats at the caller
-    (``snap_read(prune=...)`` for range scans).
+    (``snap_read(prune=...)`` for range scans). Hive-layout reads pin the
+    schema from the first data file's footer (``footer_schema``; see the
+    module docstring for the fallback rule), so no read runs a Spark job.
     """
     from tickerlake_spark.storage.snapshots import is_snapshot_table, snap_read
 
     if is_snapshot_table(path, fs=fs):
         return snap_read(spark, path, fs=fs)
-    return spark.read.parquet(path)
+    schema = footer_schema(path, fs=fs)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+# footer key under which Spark's parquet writer stores the Catalyst schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(path: str, fs: FS = LOCAL_FS) -> StructType | None:
+    """The Spark schema stored in the footer of the table's first data
+    file — the value Spark's own inference would return — or None when
+    there is no data file, the key is missing or it does not parse. The
+    walk stops at the first file: a Hive layout costs two listings."""
+    f = next(_data_files(path, fs=fs), None)
+    if f is None:
+        return None
+    try:
+        kv = parquet_footer_metadata(f, fs=fs).metadata or {}
+        return StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+    except (KeyError, ValueError, TypeError, AttributeError, OSError):
+        return None
 
 
 def write_table(
@@ -230,22 +269,20 @@ def stats_minmax_exact(st) -> bool:
     )
 
 
-def _data_files(path: str, fs: FS = LOCAL_FS) -> list[str]:
-    """Parquet data files of a table, skipping the ``_``/``.``-prefixed
-    directories and files Spark's file index ignores — the load-bearing
-    rule that keeps crash-leftover staging dirs (``_compact_*``/``_old_*``)
-    out of every footer-stats probe. Single shared walk for all probes."""
+def _data_files(path: str, fs: FS = LOCAL_FS) -> Iterator[str]:
+    """Parquet data files of a table in sorted walk order, skipping the
+    ``_``/``.``-prefixed directories and files Spark's file index ignores —
+    the load-bearing rule that keeps crash-leftover staging dirs
+    (``_compact_*``/``_old_*``) out of every footer probe. Single shared
+    walk for all probes; lazy, so a caller may stop early."""
     if fs.isfile(path):
-        return [path]
-    files: list[str] = []
+        yield path
+        return
     for r, dirs, fnames in fs.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        files.extend(
-            f"{r.rstrip('/')}/{f}"
-            for f in fnames
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return files
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(fnames):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield f"{r.rstrip('/')}/{f}"
 
 
 def parquet_stats_max(path: str, column: str, fs: FS = LOCAL_FS):
@@ -276,9 +313,8 @@ def parquet_stats_max(path: str, column: str, fs: FS = LOCAL_FS):
     """
     if not table_exists(path, fs=fs):
         return None
-    files = _data_files(path, fs=fs)
     mx = None
-    for f in files:
+    for f in _data_files(path, fs=fs):
         md = parquet_footer_metadata(f, fs=fs)
         try:
             idx = md.schema.names.index(column)
@@ -400,7 +436,7 @@ def get_max_date(
             if table_exists(f"{path.rstrip('/')}/{d}", fs=fs):
                 return d[len(prefix):]
     row = (
-        spark.read.parquet(path)
+        read_table(spark, path, fs=fs)
         .agg(F.max(F.col(column).cast("string")).alias("mx"))
         .first()
     )

@@ -36,6 +36,7 @@ import uuid
 from pyspark.sql import SparkSession
 
 from tickerlake_spark.storage.fs import FS, LOCAL_FS
+from tickerlake_spark.storage.io import read_table
 
 __all__ = [
     "compact_table",
@@ -314,7 +315,7 @@ def compact_partition_dirs(
             continue
         _n, total = table_file_stats(part_dir, fs=fs)
         n_out = max(1, math.ceil(total / target_file_bytes))
-        df = spark.read.parquet(part_dir)
+        df = read_table(spark, part_dir, fs=fs)
         if sort_by:
             df = df.coalesce(n_out).sortWithinPartitions(*sort_by)
         else:
@@ -381,7 +382,7 @@ def compact_table(
     if before_n < min_files_to_compact and zorder_by is None:
         return {"files_before": before_n, "files_after": before_n, "bytes": total}
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_table(spark, path, fs=fs)
     tmp = f"{path.rstrip('/')}__compact_{uuid.uuid4().hex[:8]}"
     if zorder_by:
         from tickerlake_spark.storage.clustering import zorder_layout
@@ -440,7 +441,7 @@ def compact_ingest_partitions(
 
     _repair_partial_compaction(path, fs=fs)
     files_before, _ = table_file_stats(path, fs=fs)
-    df = spark.read.parquet(path)
+    df = read_table(spark, path, fs=fs)
     aged = df.filter((F.col(batch_col) < horizon_batch) & (F.col(batch_col) != -1))
     n_rows = aged.count()  # newly folded rows; the -1 history itself is not "work"
     if n_rows == 0:

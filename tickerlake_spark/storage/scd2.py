@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tickerlake_spark.storage.io import table_exists, write_table
+from tickerlake_spark.storage.io import read_table, table_exists, write_table
 from tickerlake_spark.storage.upsert import replace_keys
 
 __all__ = ["scd2_apply", "scd2_current", "scd2_as_of", "scd2_join", "stream_scd2"]
@@ -61,7 +61,7 @@ def scd2_apply(
         write_table(first, path)
         return {"new": first.count(), "changed": 0, "unchanged": 0}
 
-    stored = spark.read.parquet(path)
+    stored = read_table(spark, path)
     current = stored.filter(F.col("is_current"))
 
     u = updates.alias("u")
@@ -116,14 +116,14 @@ def scd2_apply(
 
 def scd2_current(spark: SparkSession, path: str) -> DataFrame:
     """The live dimension view (one row per key)."""
-    return spark.read.parquet(path).filter(F.col("is_current"))
+    return read_table(spark, path).filter(F.col("is_current"))
 
 
 def scd2_as_of(spark: SparkSession, path: str, as_of) -> DataFrame:
     """Point-in-time view: rows valid at ``as_of`` (a date/date-string).
     valid_from inclusive, valid_to exclusive — the half-open convention."""
     d = F.lit(as_of).cast("date")
-    df = spark.read.parquet(path)
+    df = read_table(spark, path)
     return df.filter(
         (F.col("valid_from") <= d)
         & (F.col("valid_to").isNull() | (F.col("valid_to") > d))

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from tickerlake_spark.storage.fs import FS, LOCAL_FS
 from tickerlake_spark.storage.io import (
     detect_partition_column,
+    read_table,
     table_exists,
     write_table,
 )
@@ -212,7 +213,7 @@ def upsert_table(
         updates.write.parquet(staged_dir)
     try:
         if stage_updates:
-            updates = spark.read.parquet(staged_dir)
+            updates = spark.read.schema(updates.schema).parquet(staged_dir)
         if validate_unique:
             from tickerlake_spark.storage.io import assert_unique_keys
 
@@ -225,7 +226,7 @@ def upsert_table(
 
         on_disk = detect_partition_column(path, fs=fs)
         partition_by = _reconcile_layout(path, partition_by, fs=fs)
-        existing = spark.read.parquet(path)
+        existing = read_table(spark, path, fs=fs)
         if partition_by is None or on_disk is None:
             # unpartitioned table: full rewrite + atomic swap. When the
             # caller asked for a partitioned layout this same branch MIGRATES
@@ -301,7 +302,7 @@ def _upsert_partitioned(
     # partitions — small), then dynamic-overwrite from the staged copy.
     tmp = f"{path.rstrip('/')}__upsert_{uuid.uuid4().hex[:8]}"
     merged.write.parquet(tmp)
-    staged = spark.read.parquet(tmp)
+    staged = spark.read.schema(merged.schema).parquet(tmp)
     try:
         # Dynamic overwrite only replaces partitions present in the written
         # data: a touched partition whose every row was migrated away has no
@@ -383,7 +384,7 @@ def replace_keys(
         write_table(updates, path, partition_by=partition_by)
         return {"inserted": updates.count(), "mode": "create"}
     partition_by = _reconcile_layout(path, partition_by, fs=fs)
-    existing = spark.read.parquet(path)
+    existing = read_table(spark, path, fs=fs)
     if (
         partition_by in keys
         and detect_partition_column(path, fs=fs) == partition_by
@@ -445,7 +446,7 @@ def _replace_keys_partitioned(
     merged = survivors.unionByName(updates.select(*existing.columns))
     tmp = f"{path.rstrip('/')}__replace_{uuid.uuid4().hex[:8]}"
     merged.write.parquet(tmp)
-    staged = spark.read.parquet(tmp)
+    staged = spark.read.schema(merged.schema).parquet(tmp)
     n_inserted = updates.count() if with_count else None
     try:
         written = {

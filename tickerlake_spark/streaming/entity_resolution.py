@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tickerlake_spark.operators.fuzzyjoin import fuzzy_best_match
+from tickerlake_spark.storage.io import read_table
 from tickerlake_spark.storage.upsert import upsert_table
 
 __all__ = ["resolve_batch", "stream_entity_resolution"]
@@ -52,7 +53,7 @@ def resolve_batch(
     table and upsert (id, canonical_id, distance) into the matches table."""
     if batch.isEmpty():
         return
-    canonical = spark.read.parquet(canonical_path).select(canonical_id, col)
+    canonical = read_table(spark, canonical_path).select(canonical_id, col)
     # dedupe on the record id: fuzzy_best_match groups per id, but the
     # unmatched anti-join PRESERVES duplicates, and the keyed upsert runs
     # with validate_unique=False — duplicate ids in one micro-batch would

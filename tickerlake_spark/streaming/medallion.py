@@ -281,7 +281,7 @@ def _signals_snapshot_upsert(spark, catalog, sig_conformed: DataFrame) -> None:
         )
         return
     if table_exists(path, fs=fs):
-        legacy = spark.read.parquet(path).select(*sig_conformed.columns)
+        legacy = read_table(spark, path, fs=fs).select(*sig_conformed.columns)
         merged = legacy.join(
             sig_conformed.select("ticker", "date"), ["ticker", "date"],
             "left_anti",
@@ -327,7 +327,7 @@ def _hvc_snapshot_replace(spark, catalog, table: str, ev_conformed, lo) -> None:
         snap_replace_where(spark, path, ev_conformed, "date", lo=lo, fs=fs)
         return
     if table_exists(path, fs=fs):
-        legacy = spark.read.parquet(path).select(*ev_conformed.columns)
+        legacy = read_table(spark, path, fs=fs).select(*ev_conformed.columns)
         merged = legacy.filter(F.col("date") < F.lit(lo)).unionByName(
             ev_conformed
         )

@@ -26,7 +26,7 @@ from tickerlake_spark.operators.incremental_agg import (
     sketch_distinct_delta,
 )
 from tickerlake_spark.storage.fs import FS, LOCAL_FS
-from tickerlake_spark.storage.io import table_exists
+from tickerlake_spark.storage.io import read_table, table_exists
 from tickerlake_spark.storage.upsert import upsert_table
 
 __all__ = [
@@ -108,7 +108,7 @@ def sketch_rollup_batch(
     delta = sketch_distinct_delta(batch, keys, col, lgk=lgk)
     if table_exists(path, fs=fs):
         touched = (
-            spark.read.parquet(path)
+            read_table(spark, path, fs=fs)
             .join(delta.select(*keys), keys, "left_semi")
         )
         delta = merge_distinct_sketches(touched, delta, keys)
@@ -137,7 +137,7 @@ def kmv_rollup_batch(
         return
     delta = kmv_delta(batch, keys, col, k=k)
     if table_exists(path, fs=fs):
-        touched = spark.read.parquet(path).join(
+        touched = read_table(spark, path, fs=fs).join(
             delta.select(*keys).distinct(), keys, "left_semi"
         )
         delta = kmv_merge(touched, delta, keys, k=k)
@@ -256,7 +256,7 @@ def cms_rollup_serve(
     from pyspark.sql import functions as F
 
     return (
-        spark.read.parquet(path)
+        read_table(spark, path)
         .groupBy(*keys, "r", "c")
         .agg(F.sum("n").alias("n"))
     )
@@ -294,7 +294,7 @@ def cms_compact_rollup(
     # finish any interrupted previous swap first — scoped to THIS table's
     # markers (a parent-wide repair races sibling tables' in-flight swaps)
     repair_table_swaps(*split_layer(path), fs=fs)
-    stored = spark.read.parquet(path)
+    stored = read_table(spark, path, fs=fs)
     ids = sorted(
         r[0] for r in stored.select("batch_id").distinct().collect() if r[0] >= 0
     )
@@ -392,7 +392,7 @@ def bloom_rollup_batch(
     _check_params(path, fs=fs, m_bits=m_bits, k=k)
     delta = bloom_words(batch, key_col, m_bits, k)
     if table_exists(path, fs=fs):
-        stored = spark.read.parquet(path)
+        stored = read_table(spark, path, fs=fs)
         delta = (
             stored.unionByName(delta)
             .groupBy("wi")
@@ -409,7 +409,7 @@ def bloom_rollup_literal(
     contract) — feed to ``bloom_might_contain`` for map-side fact pruning."""
     _check_params(path, fs=fs, m_bits=m_bits)
     dense = [0] * (m_bits // 32)
-    for row in spark.read.parquet(path).collect():
+    for row in read_table(spark, path, fs=fs).collect():
         dense[row["wi"]] = int(row["word"])
     return dense
 
