@@ -57,6 +57,10 @@ FS_TAKING = {
     "snap_read",
     "snap_write",
     "snap_upsert",
+    "snap_replace_where",
+    "snap_changes",
+    "snap_files",
+    "snap_schema",
     "snap_vacuum",
     "snap_compact",
     "snap_stats_max",

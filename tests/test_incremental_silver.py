@@ -15,10 +15,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from tickerlake_spark.operators.incremental_silver import (
-    affected_resample,
-    incremental_indicators,
-)
+from tickerlake_spark.operators.incremental_silver import affected_resample
 from tickerlake_spark.operators.indicators import compute_indicators
 from tickerlake_spark.operators.resample import resample_ohlcv
 from tickerlake_spark.sources.calendar import trading_days
@@ -63,11 +60,29 @@ def _collect(df):
     return sorted(map(tuple, rounded.collect()))
 
 
+def _fallback_indicators(df, since, horizon_days=None):
+    """The incremental path's fallback, as ``pipeline.apply_silver_delta``
+    runs it when no valid tails exist: a tail built from the history
+    before ``since`` (scan optionally pruned to ``horizon_days``), then
+    indicators from that tail plus every row on or after ``since``."""
+    from tickerlake_spark.operators.indicator_state import (
+        build_tail,
+        indicators_from_tail,
+    )
+
+    ctx = build_tail(
+        df.filter(F.col("date") < F.lit(since)),
+        horizon_days=horizon_days,
+        as_of=since,
+    )
+    return indicators_from_tail(ctx, df.filter(F.col("date") >= F.lit(since)), since)
+
+
 def test_incremental_indicators_equals_full_recompute(spark, bars):
     df, days = bars
     since = days[250]
     full = compute_indicators(df).filter(F.col("date") >= F.lit(since))
-    inc = incremental_indicators(df, since)
+    inc = _fallback_indicators(df, since)
     assert _collect(inc) == _collect(full)
     # sma_200 must be populated across the cutoff (the deepest dependency
     # actually exercised, not vacuously-null parity)
@@ -80,7 +95,7 @@ def test_incremental_indicators_with_scan_horizon(spark, bars):
     df, days = bars
     since = days[250]
     full = compute_indicators(df).filter(F.col("date") >= F.lit(since))
-    inc = incremental_indicators(df, since, horizon_days=600)
+    inc = _fallback_indicators(df, since, horizon_days=600)
     assert _collect(inc) == _collect(full)
 
 

@@ -1221,14 +1221,12 @@ def test_streaming_extract_append_replay_converges(spark, tmp_path):
     run_silver(spark, cat, cp)
     run_gold(spark, cat, calculated_at=stamp, checkpoints=cp)
 
-    def one_batch(day, batch_id):
+    def one_batch(day):
         b = schemas.conform(bars([day]), schemas.STOCKS)
         silver_maintenance_batch(spark, cat, b)
-        gold_maintenance_batch(
-            spark, cat, b, calculated_at=stamp, batch_id=batch_id, checkpoints=cp
-        )
+        gold_maintenance_batch(spark, cat, b, calculated_at=stamp)
 
-    one_batch(days[-2], 0)  # forward vs the run_gold-built extract -> append
+    one_batch(days[-2])  # forward vs the run_gold-built extract -> append
     extract = cat.gold("closes_by_ticker")
     files_before = {
         (r, f)
@@ -1236,7 +1234,7 @@ def test_streaming_extract_append_replay_converges(spark, tmp_path):
         for f in fs
         if f.endswith(".parquet")
     }
-    one_batch(days[-1], 1)  # forward batch -> append path
+    one_batch(days[-1])  # forward batch -> append path
     # append: every pre-existing extract file is still there untouched
     files_after = {
         (r, f)
@@ -1245,7 +1243,7 @@ def test_streaming_extract_append_replay_converges(spark, tmp_path):
         if f.endswith(".parquet")
     }
     assert files_before <= files_after, "append path rewrote old buckets"
-    one_batch(days[-1], 1)  # replay: ext_max == since -> replace path
+    one_batch(days[-1])  # replay: ext_max == since -> replace path
     ext = read_table(spark, extract)
     assert ext.count() == ext.select("ticker", "date").distinct().count()
     # content mirrors silver closes exactly
@@ -1309,15 +1307,13 @@ def test_streaming_extract_no_dup_after_batch_pipeline_advance(spark, tmp_path):
     run_silver(spark, cat, cp)
     run_gold(spark, cat, calculated_at=stamp, checkpoints=cp)
 
-    def one_batch(day, batch_id):
+    def one_batch(day):
         b = schemas.conform(bars([day]), schemas.STOCKS)
         silver_maintenance_batch(spark, cat, b)
-        gold_maintenance_batch(
-            spark, cat, b, calculated_at=stamp, batch_id=batch_id, checkpoints=cp
-        )
+        gold_maintenance_batch(spark, cat, b, calculated_at=stamp)
 
     # stream handles one batch (establishes any stream-side state)
-    one_batch(days[-3], 0)
+    one_batch(days[-3])
     # the BATCH pipeline then advances the lake (alternation): bronze gets
     # days[-2], run_silver + run_gold maintain silver AND the extract
     write_table(
@@ -1331,13 +1327,13 @@ def test_streaming_extract_no_dup_after_batch_pipeline_advance(spark, tmp_path):
 
     # the stream replays ITS OWN batch for days[-2] (e.g. re-delivered
     # files): since == extract max -> must replace, never append
-    one_batch(days[-2], 1)
+    one_batch(days[-2])
     ext = read_table(spark, cat.gold("closes_by_ticker"))
     assert ext.count() == ext.select("ticker", "date").distinct().count(), (
         "duplicate extract rows after batch-pipeline alternation"
     )
     # and a genuinely-new stream batch still appends cleanly afterwards
-    one_batch(days[-1], 2)
+    one_batch(days[-1])
     ext = read_table(spark, cat.gold("closes_by_ticker"))
     assert ext.count() == ext.select("ticker", "date").distinct().count()
     want = sorted(
@@ -1354,9 +1350,9 @@ def test_streaming_extract_no_dup_after_batch_pipeline_advance(spark, tmp_path):
 def test_streaming_silver_tail_state_matches_batch(spark, tmp_path):
     """Streaming silver maintenance with the lake's checkpoint store uses
     (and maintains) the same indicator-tail state as the batch append:
-    successive forward micro-batches converge to a from-scratch rebuild,
-    the as_of watermark tracks each batch, and the stored tails equal a
-    fresh build over the final aggregates."""
+    successive forward micro-batches and a replay of the last one converge
+    to a from-scratch rebuild, the as_of watermark tracks each batch, and
+    the stored tails equal a fresh build over the final aggregates."""
     import datetime as dt
 
     from tickerlake_spark.operators.indicator_state import build_tail
@@ -1397,6 +1393,12 @@ def test_streaming_silver_tail_state_matches_batch(spark, tmp_path):
         write_table(b, cat_a.bronze("stocks"), mode="append", partition_by="date")
         silver_maintenance_batch(spark, cat_a, b, checkpoints=cp_a)
         assert cp_a.get("silver_tail_as_of") == d.isoformat()
+    # replay the last forward batch (a re-delivered micro-batch): its rows
+    # already landed, so it is not forward and takes the upsert arm with a
+    # horizon-built context — the tables, the tails and the as_of watermark
+    # must all converge to the same state as before the replay
+    silver_maintenance_batch(spark, cat_a, b, checkpoints=cp_a)
+    assert cp_a.get("silver_tail_as_of") == days[-1].isoformat()
 
     # lake B: one-shot batch rebuild over everything
     cat_b = Catalog(root=str(tmp_path / "b"))

@@ -1,84 +1,44 @@
-"""Incremental silver maintenance: bounded-lookback indicators + bucket-scoped
-resample deltas for the append path.
+"""Incremental silver maintenance: the bounded-lookback constant and the
+bucket-scoped resample delta behind ``pipeline.apply_silver_delta``.
 
 The reference's incremental silver run appends new daily bars but still
 recomputes weekly/monthly aggregates and every indicator table from ALL
 history (reference: silver/main.py:133-233 re-reads everything each run; its
 2-5 min "append" at 12.5M bars is mostly this recompute). At 100 TB the full
-recompute dominates the daily job, so the engine's append path touches only
-what one new trading day can actually change:
+recompute dominates the daily job, so the engine's incremental path touches
+only what one batch of bars can actually change:
 
 - every indicator has a FINITE lookback — sma_200 is the deepest at 200 rows
   per ticker; ATR-14 is a plain rolling mean of true range (14 rows, +1 for
   the close lag), NOT Wilder's recursive smoothing — so indicator rows on or
   after a cutoff date are a pure function of (rows >= cutoff) plus the last
-  200 rows per ticker before it;
+  ``CONTEXT_ROWS`` rows per ticker before it (the indicator-tail state,
+  ``operators/indicator_state``);
 - a resample bucket (week / month) is a pure function of the daily rows
-  inside it, so only buckets from the one containing the watermark onward
-  can change.
+  inside it, so only buckets from the one containing the day before the
+  batch onward can change (``affected_resample``).
 
-Both deltas land via append (strictly-new keys) or ``storage.upsert_table``
-MERGE (changed buckets), never a full-table rewrite of unrelated rows.
+Forward batches append; replays upsert: daily rows of a batch past the
+watermark land via append (strictly-new keys), everything else — changed
+buckets, replayed or late rows — via ``storage.upsert_table`` MERGE, never a
+full-table rewrite of unrelated rows.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tickerlake_spark.operators.indicators import compute_indicators
 from tickerlake_spark.operators.resample import resample_ohlcv
 
-__all__ = ["incremental_indicators", "affected_resample", "CONTEXT_ROWS"]
+__all__ = ["affected_resample", "CONTEXT_ROWS"]
 
 # Deepest per-ticker window dependency across all indicator columns:
 # sma_200 needs the current row + 199 predecessors. The true-range close lag
 # adds one more row at depth 14 << 200, so 200 prior rows always suffice.
 CONTEXT_ROWS = 200
-
-
-def incremental_indicators(
-    bars: DataFrame,
-    since: dt.date,
-    horizon_days: int | None = None,
-) -> DataFrame:
-    """Indicator rows for ``date >= since`` only, computed from bounded input.
-
-    ``bars`` is the full aggregates table (daily/weekly/monthly; must already
-    contain the new rows). Output rows equal the same rows of a full
-    ``compute_indicators(bars)`` recompute: the window context is the last
-    ``CONTEXT_ROWS`` rows per ticker before ``since`` — exactly the deepest
-    dependency — plus everything from ``since`` on. Context rows deeper than
-    the lag horizon get wrong true-range values, but those rows are dropped
-    before returning, and no kept row reads them (ATR depth 14 << 200).
-
-    ``horizon_days`` additionally prunes the history SCAN to
-    ``since - horizon_days`` before ranking (row-group / partition pruning —
-    the 100 TB knob). Exactness then requires every ticker to have its last
-    ``CONTEXT_ROWS`` bars inside the horizon; for daily bars, 600 days ≈ 410
-    sessions covers any ticker trading at least half the time. The pipeline
-    applies the same >=50%-bucket-density convention to the resampled tables
-    (2x CONTEXT_ROWS buckets in calendar days: 2,800 for weekly, 12,200 for
-    monthly — run_silver), which only starts pruning once history is deeper
-    than ~8 / ~33 years; ``None`` disables the scan bound entirely and is
-    unconditionally exact.
-    """
-    cutoff = F.lit(since).cast("date")
-    hist = bars.filter(F.col("date") < cutoff)
-    if horizon_days is not None:
-        hist = hist.filter(
-            F.col("date") >= F.date_sub(cutoff, horizon_days)
-        )
-    w = Window.partitionBy("ticker").orderBy(F.col("date").desc())
-    context = (
-        hist.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= CONTEXT_ROWS)
-        .drop("__rn")
-    )
-    inputs = context.unionByName(bars.filter(F.col("date") >= cutoff))
-    return compute_indicators(inputs).filter(F.col("date") >= cutoff)
 
 
 def affected_resample(daily: DataFrame, period: str, since: dt.date) -> DataFrame:

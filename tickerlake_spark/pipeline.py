@@ -34,10 +34,7 @@ from tickerlake_spark.operators.hvc import (
     stairstep_patterns,
     stairstep_seq,
 )
-from tickerlake_spark.operators.incremental_silver import (
-    affected_resample,
-    incremental_indicators,
-)
+from tickerlake_spark.operators.incremental_silver import affected_resample
 from tickerlake_spark.operators.indicators import compute_indicators
 from tickerlake_spark.operators.resample import resample_ohlcv
 from tickerlake_spark.operators.splits import apply_splits
@@ -71,20 +68,13 @@ def _gold_snap_overwrite(spark, catalog: Catalog, df, table: str) -> None:
     manifest commit of date-clustered files — readers mid-rebuild keep the
     prior version, history stays time-travelable, and the per-file date
     ranges give manifest pruning what the old date directories gave via
-    listing. A legacy Hive-partitioned layout (pre-adoption lake) migrates
-    by one drop+rebuild — the full arm recomputes everything anyway."""
-    from tickerlake_spark.storage import drop_table
-    from tickerlake_spark.storage.snapshots import is_snapshot_table, snap_write
+    listing."""
+    from tickerlake_spark.storage.snapshots import snap_write
 
-    path = catalog.gold(table)
-    if table_exists(path, fs=catalog.fs) and not is_snapshot_table(
-        path, fs=catalog.fs
-    ):
-        drop_table(path, fs=catalog.fs)
     snap_write(
         spark,
         df,
-        path,
+        catalog.gold(table),
         mode="overwrite",
         cluster_by=("date",),
         stats_cols=("date",),
@@ -143,6 +133,7 @@ __all__ = [
     "run_gold",
     "run_validate",
     "should_full_rewrite",
+    "apply_silver_delta",
 ]
 
 
@@ -286,26 +277,25 @@ def should_full_rewrite(
 
 def _rewrite_gate(
     spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints | None
-) -> tuple[bool, dict[str, str | None]]:
-    """``should_full_rewrite``'s decision plus the fingerprints it computed
-    on the way, keyed by checkpoint name, so ``run_silver`` records the
-    values the gate compared instead of recomputing them at commit."""
-    seen: dict[str, str | None] = {}
-    daily_path = catalog.silver("daily_aggregates")
-    if not table_exists(daily_path, fs=catalog.fs):
-        return True, seen
-    # migration guard: a lake written before silver was date-partitioned has
-    # root-level part files; appending date=.../ dirs next to them would
-    # corrupt the layout (Spark: 'Conflicting directory structures') and the
-    # partition-listing watermark would read a bogus value from the partial
-    # dirs. Force one full rewrite to migrate the table.
-    from tickerlake_spark.storage import detect_partition_column
+) -> tuple[bool, dict[str, str | None], str | None]:
+    """``should_full_rewrite``'s decision, the fingerprints it computed on
+    the way (keyed by checkpoint name, so ``run_silver`` records the values
+    the gate compared instead of recomputing them at commit) and the
+    watermark an append resumes from (None when silver is missing).
 
-    if detect_partition_column(daily_path, fs=catalog.fs) != "date":
-        return True, seen
-    max_silver = get_max_date(spark, daily_path, fs=catalog.fs)
-    if max_silver is None:
-        return True, seen
+    That watermark is the LAGGING one of ``daily_aggregates`` and
+    ``daily_indicators``: a crash between the two tables' commits leaves
+    the aggregates one batch ahead, and resuming from the indicators
+    re-covers that batch (``apply_silver_delta``'s upsert arm converges
+    the aggregates rows it already holds)."""
+    seen: dict[str, str | None] = {}
+    marks = [
+        get_max_date(spark, catalog.silver(t), fs=catalog.fs)
+        for t in ("daily_aggregates", "daily_indicators")
+    ]
+    if None in marks:
+        return True, seen, None
+    watermark = min(marks)
     if checkpoints is not None:
         # a changed CS/ETF universe (ticker reclassified in or out) stales
         # history exactly like a late split: the append path can only admit
@@ -318,22 +308,22 @@ def _rewrite_gate(
                 spark, catalog
             )
             if fp != rec_universe:
-                return True, seen
+                return True, seen, watermark
     if not table_exists(catalog.bronze("splits"), fs=catalog.fs):
-        return False, seen
+        return False, seen, watermark
     if checkpoints is not None:
         recorded = checkpoints.get("silver_splits_fingerprint")
         if recorded is not None:
             fp = seen["silver_splits_fingerprint"] = _splits_fingerprint(
                 spark, catalog
             )
-            return fp != recorded, seen
+            return fp != recorded, seen, watermark
     n_new = (
         read_table(spark, catalog.bronze("splits"), fs=catalog.fs)
-        .filter(F.col("execution_date") > F.lit(max_silver).cast("date"))
+        .filter(F.col("execution_date") > F.lit(watermark).cast("date"))
         .count()
     )
-    return n_new > 0, seen
+    return n_new > 0, seen, watermark
 
 
 def _record_fingerprints(
@@ -400,14 +390,9 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
         )
         stocks = stocks.join(F.broadcast(universe), "ticker", "left_semi")
 
-    full, fingerprints = _rewrite_gate(spark, catalog, checkpoints)
-    mode = "overwrite"
+    full, fingerprints, watermark = _rewrite_gate(spark, catalog, checkpoints)
     if not full:
-        watermark = get_max_date(
-            spark, catalog.silver("daily_aggregates"), fs=catalog.fs
-        )
         stocks = stocks.filter(F.col("date") > F.lit(watermark).cast("date"))
-        mode = "append"
         if stocks.isEmpty():
             return {"mode": "noop", "reason": "no bars newer than watermark"}
     timer.mark("rewrite_gate")
@@ -424,13 +409,6 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
     # apply_splits is shuffle-free, so the bronze date layout flows straight
     # through to the silver write: each task holds whole dates and writes one
     # file per date directory — no repartition needed here.
-    if not full:
-        write_table(
-            daily, catalog.silver("daily_aggregates"), mode=mode,
-            partition_by="date", fs=catalog.fs,
-        )
-        timer.mark("daily_aggregates")
-        full_daily = read_table(spark, catalog.silver("daily_aggregates"), fs=catalog.fs)
     if full:
         # full rewrite: every downstream table recomputes from all history.
         # resample/indicators emerge ticker-clustered from their window
@@ -489,7 +467,7 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
         def _daily_chain() -> None:
             with timer.span("daily_aggregates"):
                 write_table(
-                    daily, catalog.silver("daily_aggregates"), mode=mode,
+                    daily, catalog.silver("daily_aggregates"),
                     partition_by="date", fs=catalog.fs,
                 )
             _indicators_for("daily_aggregates", "daily_indicators")
@@ -543,19 +521,59 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
         timer.mark("checkpoints")
         return {"mode": "full", "timings": timer.timings, "indicator_masks": masks}
 
-    # append path: touch only what one new batch of bars can change.
-    # Rolling windows and resample buckets straddle the watermark, but the
-    # straddle is FINITE (200 rows / one bucket) — recompute exactly that
-    # slice and MERGE it, never the whole table (operators/incremental_silver;
-    # the reference's "append" recomputes all indicator/resample tables from
-    # full history every run, silver/main.py:133-233).
-    #
-    # Window CONTEXT comes from the per-grain indicator-tail state tables
-    # when they are exactly at this watermark (operators/indicator_state) —
-    # O(tickers x 205) reads, independent of history depth. A lake without
-    # valid tails (first append after a full rewrite / legacy / streaming-
-    # advanced) falls back to the horizon-pruned history scan for THIS run
-    # and rebuilds the tails, so the bounded path self-installs.
+    # append path: the shared incremental silver path, from the day after
+    # the (lagging) watermark
+    since = dt.date.fromisoformat(watermark) + dt.timedelta(days=1)
+    apply_silver_delta(spark, catalog, checkpoints, daily, since, timer)
+    _record_fingerprints(spark, catalog, checkpoints, fingerprints)
+    checkpoints.set("silver_last_mode", "append")
+    timer.mark("checkpoints")
+    return {"mode": "append", "timings": timer.timings}
+
+
+def apply_silver_delta(
+    spark: SparkSession,
+    catalog: Catalog,
+    checkpoints: Checkpoints | None,
+    adjusted: DataFrame,
+    since: dt.date,
+    timer: _StageTimer | None = None,
+) -> None:
+    """Maintain every silver table for one batch of bars: THE incremental
+    silver path, shared by ``run_silver``'s append arm and the streaming
+    ``silver_maintenance_batch``.
+
+    ``adjusted`` holds split-adjusted bars (AGGREGATES schema), already
+    restricted to the ticker universe and known non-empty; ``since`` is the
+    earliest date the batch can change. Only what the batch can change is
+    recomputed: rolling windows and resample buckets straddle ``since``,
+    but the straddle is FINITE (200 rows / one bucket), so that slice is
+    recomputed and merged, never the whole table (the reference's "append"
+    recomputes every indicator/resample table from full history,
+    silver/main.py:133-233).
+
+    Append or upsert follows from the batch itself: a FORWARD batch
+    (``since`` past the stored ``daily_aggregates`` watermark) holds only
+    new (ticker, date) keys, so the daily tables take plain appends. Any
+    other batch — a replay, late data, a re-delivered snapshot delta —
+    upserts them on (ticker, date); a batch any of whose rows already
+    landed can never look forward, so replays converge. So does the first
+    batch of an empty lake, whose upserts create the tables. Resample
+    tables always upsert from the bucket holding the day before ``since``.
+
+    Window CONTEXT comes from the per-grain indicator-tail state tables
+    (operators/indicator_state) when there are ``checkpoints``, the batch
+    is forward and ``silver_tail_as_of`` equals the watermark — O(tickers x
+    205) reads, independent of history depth. Otherwise it is ONE
+    horizon-pruned ``build_tail`` over the history before the cutoff,
+    persisted because it feeds both the indicator recompute and the
+    advanced tail. With ``checkpoints`` the advanced tails are swapped in
+    and ``silver_tail_as_of`` is committed only after ALL three swaps: a
+    crash mid-way leaves a mismatched as_of and the next batch falls back
+    and rebuilds.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
     from tickerlake_spark.operators.indicator_state import (
         advance_tail,
         build_tail,
@@ -563,27 +581,54 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
         replace_tail,
     )
 
-    wm = dt.date.fromisoformat(watermark)  # get_max_date returns ISO text
-    since = wm + dt.timedelta(days=1)
+    timer = timer or _StageTimer()
+    daily_path = catalog.silver("daily_aggregates")
+    wm = get_max_date(spark, daily_path, fs=catalog.fs)
+    forward = wm is not None and since > dt.date.fromisoformat(wm)
     tail_paths = {
         g: catalog.silver(f"indicator_tail_{g}") for g in ("daily", "week", "month")
     }
-    tails_valid = checkpoints.get("silver_tail_as_of") == watermark and all(
-        table_exists(p, fs=catalog.fs) for p in tail_paths.values()
+    tails_valid = (
+        checkpoints is not None
+        and forward
+        and checkpoints.get("silver_tail_as_of") == wm
+        and all(table_exists(p, fs=catalog.fs) for p in tail_paths.values())
     )
+
+    def _merge(table: str, df: DataFrame, *, append: bool) -> None:
+        if append:
+            write_table(
+                df, catalog.silver(table), mode="append", partition_by="date",
+                fs=catalog.fs,
+            )
+        else:
+            upsert_table(
+                spark,
+                catalog.silver(table),
+                df,
+                keys=["ticker", "date"],
+                partition_by="date",  # rewrites only the touched partitions
+                validate_unique=False,  # (ticker, date) unique by construction
+                with_count=False,  # the summary is discarded: skip the action
+                fs=catalog.fs,
+            )
+
+    _merge("daily_aggregates", adjusted, append=forward)
+    timer.mark("daily_aggregates")
+    full_daily = read_table(spark, daily_path, fs=catalog.fs)
 
     persisted_ctx = []
 
     def context_tail(grain: str, agg_path: str, cutoff: dt.date, horizon: int):
-        """Window context before ``cutoff``: the stored tail in the steady
-        state; on fallback (first append after a full rewrite / legacy
-        lake) ONE horizon-pruned build — persisted, because it feeds both
-        the indicator recompute and the advanced tail that installs the
-        O(state) path for every later run."""
+        """Window context before ``cutoff``: the stored tail when valid,
+        else one horizon-pruned build (persisted: it feeds both the
+        indicator recompute and the advanced tail)."""
         if tails_valid:
             return read_table(spark, tail_paths[grain], fs=catalog.fs)
         built = build_tail(
-            read_table(spark, agg_path, fs=catalog.fs).filter(F.col("date") < F.lit(cutoff)),
+            read_table(spark, agg_path, fs=catalog.fs).filter(
+                F.col("date") < F.lit(cutoff)
+            ),
             horizon_days=horizon,
             as_of=cutoff,
         ).persist()
@@ -591,30 +636,8 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
         return built
 
     new_tails = {}
-    delta_daily = full_daily.filter(F.col("date") >= F.lit(since))  # pruned
-    ctx_daily = context_tail(
-        "daily", catalog.silver("daily_aggregates"), since, 600
-    )
-    new_ind = indicators_from_tail(ctx_daily, delta_daily, since)
-    write_table(
-        schemas.conform(new_ind, schemas.INDICATORS).repartition("date"),
-        catalog.silver("daily_indicators"),
-        mode="append",
-        partition_by="date",
-        fs=catalog.fs,
-    )
-    new_tails["daily"] = advance_tail(ctx_daily, delta_daily)
-    timer.mark("daily_indicators")
+    prev = since - dt.timedelta(days=1)
 
-    # Tail swaps overlap the grain chains (optimization r12, guide §2.6):
-    # the three replace_tail writes used to serialize AFTER the
-    # weekly+monthly pool (~4s of the append was pure tail phase), but each
-    # grain's swap depends only on its own chain — the daily swap can run
-    # concurrently with the resampled chains, and each resampled chain
-    # swaps its own tail as its last step. The crash contract is unchanged:
-    # silver_tail_as_of is still committed only after ALL swaps succeeded,
-    # so a crash mid-way leaves a mismatched as_of and the next run falls
-    # back + rebuilds (replace_tail docstring).
     def _tail_swap(grain: str) -> None:
         with timer.span("indicator_tails"):
             replace_tail(spark, new_tails[grain], tail_paths[grain], fs=catalog.fs)
@@ -623,82 +646,75 @@ def run_silver(spark: SparkSession, catalog: Catalog, checkpoints: Checkpoints) 
                          horizon: int) -> None:
         # horizon = 2x CONTEXT_ROWS buckets in calendar days, the same
         # >=50%-density exactness assumption the daily path's 600-day
-        # horizon makes (incremental_indicators docstring): 400 weekly
-        # buckets = 2,800 days, 400 monthly = 12,200. Only scanned when the
-        # tails are invalid — the steady state reads the tail tables.
-        delta = schemas.conform(
-            affected_resample(full_daily, period, wm), schemas.AGGREGATES
+        # horizon makes (build_tail docstring): 400 weekly buckets = 2,800
+        # days, 400 monthly = 12,200. Only scanned when the tails are
+        # invalid — the steady state reads the tail tables.
+        _merge(
+            agg_table,
+            schemas.conform(
+                affected_resample(full_daily, period, prev), schemas.AGGREGATES
+            ),
+            append=False,
         )
-        upsert_table(
-            spark,
-            catalog.silver(agg_table),
-            delta,
-            keys=["ticker", "date"],
-            partition_by="date",  # rewrites only the touched bucket partitions
-            validate_unique=False,  # (ticker, bucket) unique by construction
-            with_count=False,  # the summary is discarded: skip the action
-            fs=catalog.fs,
-        )
-        bucket_since = _bucket_start(period, wm)
+        bucket_since = _bucket_start(period, prev)
         ctx = context_tail(period, catalog.silver(agg_table), bucket_since, horizon)
         # the recomputed rows exactly as stored, via a partition-pruned
         # read-back of the touched bucket partitions (no lineage rerun)
-        delta_stored = read_table(spark, catalog.silver(agg_table), fs=catalog.fs).filter(
-            F.col("date") >= F.lit(bucket_since)
-        )
+        delta_stored = read_table(
+            spark, catalog.silver(agg_table), fs=catalog.fs
+        ).filter(F.col("date") >= F.lit(bucket_since))
         ind_delta = indicators_from_tail(ctx, delta_stored, bucket_since)
-        upsert_table(
-            spark,
-            catalog.silver(ind_table),
-            schemas.conform(ind_delta, schemas.INDICATORS),
-            keys=["ticker", "date"],
-            partition_by="date",
-            validate_unique=False,
-            with_count=False,
-            fs=catalog.fs,
+        _merge(
+            ind_table, schemas.conform(ind_delta, schemas.INDICATORS), append=False
         )
-        new_tails[period] = advance_tail(ctx, delta_stored)
-        _tail_swap(period)
+        if checkpoints is not None:
+            new_tails[period] = advance_tail(ctx, delta_stored)
+            _tail_swap(period)
 
-    # daily_aggregates is final at this point (the resampled chains touch
-    # only weekly/monthly tables), so the next-watermark probe can run now
-    # instead of serializing after the pool
-    new_wm_iso = get_max_date(
-        spark, catalog.silver("daily_aggregates"), fs=catalog.fs
-    )
-    # the weekly and monthly chains touch disjoint tables and read only
-    # already-written daily state — run them concurrently (the merge
-    # primitives use writer-level overwrite options; no shared session
-    # state), overlapping their fixed per-job overheads; the daily tail
-    # swap rides the same pool (see _tail_swap above)
-    from concurrent.futures import ThreadPoolExecutor
+    try:
+        delta_daily = full_daily.filter(F.col("date") >= F.lit(since))  # pruned
+        ctx_daily = context_tail("daily", daily_path, since, 600)
+        new_ind = indicators_from_tail(ctx_daily, delta_daily, since)
+        _merge(
+            "daily_indicators",
+            schemas.conform(new_ind, schemas.INDICATORS).repartition("date"),
+            append=forward,
+        )
+        new_tails["daily"] = advance_tail(ctx_daily, delta_daily)
+        timer.mark("daily_indicators")
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(_tail_swap, "daily"),
-            pool.submit(
-                _resampled_chain, "week", "weekly_aggregates",
-                "weekly_indicators", 2_800,
-            ),
-            pool.submit(
-                _resampled_chain, "month", "monthly_aggregates",
-                "monthly_indicators", 12_200,
-            ),
-        ]
-        for f in futs:
-            f.result()
-    timer.mark("weekly+monthly")
-    for df in persisted_ctx:
-        df.unpersist()
-    # the as_of checkpoint commits only after ALL tails are swapped; a
-    # crash mid-way leaves a mismatched as_of and the next run falls back
-    # + rebuilds (unchanged crash contract)
-    checkpoints.set("silver_tail_as_of", new_wm_iso)
-    _record_fingerprints(spark, catalog, checkpoints, fingerprints)
-    checkpoints.set("silver_last_mode", "append")
-    timer.mark("checkpoints")
-    return {"mode": "append", "timings": timer.timings}
-
+        # daily_aggregates is final here (the resampled chains touch only
+        # weekly/monthly tables), so the next-watermark probe runs now
+        new_wm = get_max_date(spark, daily_path, fs=catalog.fs)
+        # the weekly and monthly chains touch disjoint tables and read only
+        # already-written daily state — run them concurrently (the merge
+        # primitives use writer-level overwrite options; no shared session
+        # state), overlapping their fixed per-job overheads. The tail swaps
+        # overlap too: each grain's swap depends only on its own chain, so
+        # the daily swap rides the pool and each resampled chain swaps its
+        # own tail last.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = []
+            if checkpoints is not None:
+                futs.append(pool.submit(_tail_swap, "daily"))
+            futs += [
+                pool.submit(
+                    _resampled_chain, "week", "weekly_aggregates",
+                    "weekly_indicators", 2_800,
+                ),
+                pool.submit(
+                    _resampled_chain, "month", "monthly_aggregates",
+                    "monthly_indicators", 12_200,
+                ),
+            ]
+            for f in futs:
+                f.result()
+        timer.mark("weekly+monthly")
+    finally:
+        for df in persisted_ctx:
+            df.unpersist()
+    if checkpoints is not None:
+        checkpoints.set("silver_tail_as_of", new_wm)
 
 def run_gold(
     spark: SparkSession,
@@ -774,8 +790,6 @@ def run_gold(
         if gold_exists
         else None
     )
-    from tickerlake_spark.storage.snapshots import is_snapshot_table
-
     incremental = (
         checkpoints is not None
         and checkpoints.get("silver_last_mode") == "append"
@@ -787,15 +801,6 @@ def run_gold(
         # forever. The generation counter makes the staleness visible.
         and int(checkpoints.get("gold_silver_generation") or 0)
         == int(checkpoints.get("silver_generation") or 0)
-        # the signal/HVC fact tables are snapshot-committed since r11: a
-        # legacy Hive layout (pre-migration lake) must take one full
-        # rebuild — an append/merge commit onto it would publish a v1
-        # holding only the delta while the legacy files sit invisible
-        # next to it
-        and all(
-            is_snapshot_table(catalog.gold(t), fs=catalog.fs)
-            for t in _SNAP_GOLD_TABLES
-        )
     )
     if incremental:
         # the state checkpoint must be exactly as far along as the signals
@@ -1286,9 +1291,7 @@ def run_gold(
     from tickerlake_spark.storage.snapshots import snap_vacuum
 
     for t in _SNAP_GOLD_TABLES:
-        t_path = catalog.gold(t)
-        if is_snapshot_table(t_path, fs=catalog.fs):
-            snap_vacuum(t_path, keep_last=3, fs=catalog.fs)
+        snap_vacuum(catalog.gold(t), keep_last=3, fs=catalog.fs)
     timer.mark("vacuum")
     summary = {
         "mode": "incremental" if incremental else "full",

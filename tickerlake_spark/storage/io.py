@@ -427,12 +427,14 @@ def get_max_date(
                 for d in fs.listdir(path)
                 if d.startswith(prefix)
                 and iso.match(d[len(prefix):])  # lexicographic max == date max
-                and fs.isdir(f"{path.rstrip('/')}/{d}")
             ),
             reverse=True,
         )
+        # newest first, stopping at the first partition that holds data:
+        # a steady-state probe touches one directory, not every date
         for d in part_dirs:
-            # skip stale empty dirs a dynamic-overwrite delete may leave
+            # skips stale empty dirs a dynamic-overwrite delete may leave
+            # (table_exists is False for a non-directory entry too)
             if table_exists(f"{path.rstrip('/')}/{d}", fs=fs):
                 return d[len(prefix):]
     row = (

@@ -3,15 +3,18 @@
 The reference ingests on a daily cron (reference: .github/workflows/main.yml:6-8
 — batch only). This module runs the SAME silver maintenance continuously:
 a Structured Streaming file source watches the bronze ``stocks`` layout, and
-every micro-batch of newly-landed bar files is split-adjusted and MERGEd
-into the silver tables via ``foreachBatch``, reusing the bounded incremental
-recompute from ``operators/incremental_silver`` — indicator rows from the
-batch's earliest date onward (last-200-rows context), resample buckets from
-that date's bucket onward.
+every micro-batch of newly-landed bar files is split-adjusted and handed to
+``pipeline.apply_silver_delta`` via ``foreachBatch`` — the one incremental
+silver path the batch append runs too: indicator rows from the batch's
+earliest date onward (last-200-rows context from the indicator-tail state or
+one horizon-pruned build), resample buckets from the bucket before that
+date onward.
 
-Delivery semantics: every write is a keyed upsert on (ticker, date), so a
-replayed micro-batch (crash between sink and checkpoint commit) recomputes
-byte-identical rows — effectively-once without a transactional sink, the
+Delivery semantics: forward batches append; replays upsert. A batch is
+forward only when every bar lies past the stored watermark, so its keys are
+new; a replayed micro-batch (crash between sink and checkpoint commit) has
+already landed rows, fails that test, and merges byte-identical recomputed
+rows on (ticker, date) — effectively-once without a transactional sink, the
 standard foreachBatch idempotency contract.
 
 Scale posture: the per-batch work is O(batch + bounded context), never
@@ -26,11 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tickerlake_spark import schemas
-from tickerlake_spark.operators.incremental_silver import (
-    affected_resample,
-    incremental_indicators,
-)
 from tickerlake_spark.operators.splits import apply_splits
+from tickerlake_spark.pipeline import apply_silver_delta
 from tickerlake_spark.storage import Catalog, read_table, table_exists, upsert_table
 
 __all__ = [
@@ -60,12 +60,12 @@ def silver_consume_snapshot(
     - append/stream commits deliver exactly their new rows;
     - an UPSERT commit (a corrected historical bar) re-delivers the
       rewritten files' rows — at-least-once on rewritten keys, which is
-      safe here BY CONSTRUCTION: ``silver_maintenance_batch`` recomputes
-      deterministic slices and merges them through (ticker, date)-keyed
-      upserts, so re-delivered unchanged rows converge to the identical
-      silver tables while the corrected rows propagate through every
-      indicator/resample window that straddles them (the batch fails the
-      strictly-forward tail gate and takes the horizon recompute).
+      safe here BY CONSTRUCTION: such a delta is not forward (its dates
+      are at or behind the watermark), so ``apply_silver_delta`` merges its
+      deterministic slices through (ticker, date)-keyed upserts —
+      re-delivered unchanged rows converge to the identical silver tables
+      while the corrected rows propagate through every indicator/resample
+      window that straddles them (horizon-built context, not the tails).
 
     Returns {"mode": "noop"} when bronze hasn't advanced. The consumed
     version is committed AFTER the batch applies; a crash in between
@@ -95,18 +95,12 @@ def silver_maintenance_batch(
 ) -> None:
     """Apply one micro-batch of raw bronze bars to every silver table.
 
-    Idempotent: all writes are (ticker, date)-keyed upserts of
-    deterministically-recomputed slices. Callable directly (batch backfill)
-    or from the streaming sink.
-
-    With the lake's ``checkpoints`` store, window context comes from the
-    same per-grain indicator-tail state the batch append uses
-    (``operators/indicator_state``; gate = tails at exactly the pre-batch
-    watermark AND a strictly-forward batch) — O(tickers x 205) per batch
-    instead of the horizon scans. Replays and late-data batches fail the
-    forward gate and fall back to the horizon path, which also reinstalls
-    the tails; without ``checkpoints`` the horizon path runs unconditionally
-    (no state to gate on).
+    Idempotent: forward batches append, replays upsert (see
+    ``pipeline.apply_silver_delta``). Callable directly (batch backfill) or
+    from the streaming sink. With the lake's ``checkpoints`` store the
+    batch uses and maintains the same indicator-tail state as the batch
+    append; without it the window context is rebuilt from the
+    horizon-pruned history every batch (no state to gate on).
     """
     # same universe restriction as the batch paths (VERDICT r8 item 2 /
     # pipeline.run_silver): silver holds only CS/ETF-metadata tickers.
@@ -120,28 +114,6 @@ def silver_maintenance_batch(
         batch = batch.join(F.broadcast(universe), "ticker", "left_semi")
     if batch.isEmpty():
         return
-    from tickerlake_spark.operators.indicator_state import (
-        advance_tail,
-        build_tail,
-        indicators_from_tail,
-        replace_tail,
-    )
-    from tickerlake_spark.storage import get_max_date
-
-    daily_path = catalog.silver("daily_aggregates")
-    wm_before = get_max_date(spark, daily_path, fs=catalog.fs)  # dir listing
-    since = batch.agg(F.min("date")).first()[0]
-    tail_paths = {
-        g: catalog.silver(f"indicator_tail_{g}") for g in ("daily", "week", "month")
-    }
-    tails_valid = (
-        checkpoints is not None
-        and wm_before is not None
-        and checkpoints.get("silver_tail_as_of") == wm_before
-        and str(since) > wm_before  # strictly-forward batch; ISO compare
-        and all(table_exists(p, fs=catalog.fs) for p in tail_paths.values())
-    )
-
     splits = (
         read_table(spark, catalog.bronze("splits"), fs=catalog.fs)
         if table_exists(catalog.bronze("splits"), fs=catalog.fs)
@@ -151,196 +123,8 @@ def silver_maintenance_batch(
         apply_splits(schemas.conform(batch, schemas.AGGREGATES), splits),
         schemas.AGGREGATES,
     )
-    upsert_table(
-        spark,
-        daily_path,
-        adjusted,
-        keys=["ticker", "date"],
-        partition_by="date",  # silver tables are date-partitioned (pipeline.py)
-        validate_unique=False,  # (ticker, date) unique per bronze contract
-        fs=catalog.fs,
-    )
-
-    new_tails: dict = {}
-    full_daily = read_table(spark, daily_path, fs=catalog.fs)
-    if tails_valid:
-        # post-upsert pruned read-back: with a strictly-forward batch these
-        # are exactly the batch's adjusted rows as stored
-        delta_stored = full_daily.filter(F.col("date") >= F.lit(since))
-        ctx = read_table(spark, tail_paths["daily"], fs=catalog.fs)
-        ind = indicators_from_tail(ctx, delta_stored, since)
-        new_tails["daily"] = advance_tail(ctx, delta_stored)
-    else:
-        ind = incremental_indicators(full_daily, since, horizon_days=600)
-    upsert_table(
-        spark,
-        catalog.silver("daily_indicators"),
-        schemas.conform(ind, schemas.INDICATORS),
-        keys=["ticker", "date"],
-        partition_by="date",
-        validate_unique=False,
-        fs=catalog.fs,
-    )
-    from tickerlake_spark.pipeline import _bucket_start
-
-    for period, agg_table, ind_table, horizon in (
-        # same horizon convention as the batch append (pipeline.run_silver):
-        # 2x CONTEXT_ROWS buckets in calendar days
-        ("week", "weekly_aggregates", "weekly_indicators", 2_800),
-        ("month", "monthly_aggregates", "monthly_indicators", 12_200),
-    ):
-        delta = schemas.conform(
-            affected_resample(full_daily, period, since), schemas.AGGREGATES
-        )
-        upsert_table(
-            spark,
-            catalog.silver(agg_table),
-            delta,
-            keys=["ticker", "date"],
-            partition_by="date",
-            validate_unique=False,
-            fs=catalog.fs,
-        )
-        bucket_since = _bucket_start(period, since)
-        if tails_valid:
-            delta_stored = read_table(spark, catalog.silver(agg_table), fs=catalog.fs).filter(
-                F.col("date") >= F.lit(bucket_since)
-            )
-            ctx = read_table(spark, tail_paths[period], fs=catalog.fs)
-            ind_delta = indicators_from_tail(ctx, delta_stored, bucket_since)
-            new_tails[period] = advance_tail(ctx, delta_stored)
-        else:
-            ind_delta = incremental_indicators(
-                read_table(spark, catalog.silver(agg_table), fs=catalog.fs),
-                bucket_since,
-                horizon_days=horizon,
-            )
-        upsert_table(
-            spark,
-            catalog.silver(ind_table),
-            schemas.conform(ind_delta, schemas.INDICATORS),
-            keys=["ticker", "date"],
-            partition_by="date",
-            validate_unique=False,
-            fs=catalog.fs,
-        )
-
-    if checkpoints is not None:
-        # maintain (or install) the tail state; as_of committed only after
-        # all three swaps — a crash mid-way fails the next batch's gate and
-        # the horizon fallback rebuilds (same contract as run_silver)
-        new_wm = get_max_date(spark, daily_path, fs=catalog.fs)
-        for grain, agg_table, cutoff, horizon in (
-            ("daily", "daily_aggregates", since, 600),
-            ("week", "weekly_aggregates", _bucket_start("week", since), 2_800),
-            ("month", "monthly_aggregates", _bucket_start("month", since), 12_200),
-        ):
-            nt = new_tails.get(grain)
-            if nt is None:
-                import datetime as _dt
-
-                nt = build_tail(
-                    read_table(spark, catalog.silver(agg_table), fs=catalog.fs),
-                    horizon_days=horizon,
-                    as_of=_dt.date.fromisoformat(new_wm),
-                )
-            replace_tail(spark, nt, tail_paths[grain], fs=catalog.fs)
-        checkpoints.set("silver_tail_as_of", new_wm)
-
-
-def _signals_snapshot_upsert(spark, catalog, sig_conformed: DataFrame) -> None:
-    """MERGE one micro-batch's recomputed signal slice into the
-    snapshot-committed ``gold.vwap_signals`` (r11: the table's writer is
-    ``snap_write``/``snap_upsert`` everywhere — see pipeline.run_gold).
-
-    Replay-idempotent like the old keyed upsert: the slice is a
-    deterministic recompute, and ``snap_upsert`` keyed on (date, ticker)
-    converges a replayed batch to the identical visible table (the
-    superseded version is just one more vacuumable commit). Date leads the
-    key so the file-level prune rewrites only the recent date-range files
-    of the date-clustered layout.
-
-    A legacy Hive-partitioned table (pre-r11 lake resuming under the
-    streaming maintainer) migrates in ONE commit: the legacy rows merge
-    with the batch slice into the initial snapshot version — the manifest
-    PUT atomically flips reads to the snapshot layout — then the dead
-    legacy files are swept (a crash mid-sweep leaves only invisible
-    files; the sweep re-runs next batch)."""
-    from tickerlake_spark.storage.snapshots import (
-        is_snapshot_table,
-        snap_upsert,
-        snap_write,
-    )
-
-    path = catalog.gold("vwap_signals")
-    fs = catalog.fs
-    if is_snapshot_table(path, fs=fs):
-        snap_upsert(
-            spark, path, sig_conformed, keys=["date", "ticker"],
-            stats_cols=("date",), fs=fs, validate_unique=False,
-        )
-        return
-    if table_exists(path, fs=fs):
-        legacy = read_table(spark, path, fs=fs).select(*sig_conformed.columns)
-        merged = legacy.join(
-            sig_conformed.select("ticker", "date"), ["ticker", "date"],
-            "left_anti",
-        ).unionByName(sig_conformed)
-    else:
-        merged = sig_conformed
-    snap_write(
-        spark, merged, path, mode="overwrite", cluster_by=("date",),
-        stats_cols=("date",), fs=fs,
-    )
-    # sweep legacy layout leftovers (now invisible to every reader)
-    base = path.rstrip("/")
-    for name in fs.listdir(base):
-        if not name.startswith(("_", ".")):
-            fs.rmtree(f"{base}/{name}")
-
-
-def _hvc_snapshot_replace(spark, catalog, table: str, ev_conformed, lo) -> None:
-    """REPLACE the [lo, ∞) date range of a snapshot-committed HVC table
-    with this micro-batch's re-derived events (r11: the HVC fact tables
-    are snapshot tables everywhere — see pipeline.run_gold). Events in an
-    open bucket can DISAPPEAR as the bucket fills, so this must be a range
-    replace, never a merge; as one manifest commit it is atomic (no reader
-    sees the range half-swapped) and replay-idempotent (the slice is a
-    deterministic recompute — a replayed batch converges to the identical
-    visible table).
-
-    A legacy Hive-partitioned table (pre-r11 lake resuming under the
-    streaming maintainer) migrates in ONE commit — the untouched history
-    below ``lo`` unions with the batch slice into the initial snapshot
-    version, the manifest PUT atomically flips reads — then the dead
-    legacy files are swept (a crash mid-sweep leaves only invisible
-    files; the sweep re-runs next batch)."""
-    from tickerlake_spark.storage.snapshots import (
-        is_snapshot_table,
-        snap_replace_where,
-        snap_write,
-    )
-
-    path = catalog.gold(table)
-    fs = catalog.fs
-    if is_snapshot_table(path, fs=fs):
-        snap_replace_where(spark, path, ev_conformed, "date", lo=lo, fs=fs)
-        return
-    if table_exists(path, fs=fs):
-        legacy = read_table(spark, path, fs=fs).select(*ev_conformed.columns)
-        merged = legacy.filter(F.col("date") < F.lit(lo)).unionByName(
-            ev_conformed
-        )
-    else:
-        merged = ev_conformed
-    snap_write(
-        spark, merged, path, mode="overwrite", cluster_by=("date",),
-        stats_cols=("date",), fs=fs,
-    )
-    base = path.rstrip("/")
-    for name in fs.listdir(base):
-        if not name.startswith(("_", ".")):
-            fs.rmtree(f"{base}/{name}")
+    since = batch.agg(F.min("date")).first()[0]
+    apply_silver_delta(spark, catalog, checkpoints, adjusted, since)
 
 
 def gold_maintenance_batch(
@@ -350,8 +134,6 @@ def gold_maintenance_batch(
     hvc_threshold: float = 3.0,
     min_steps: int = 3,
     calculated_at=None,
-    batch_id: int | None = None,
-    checkpoints=None,
 ) -> None:
     """Advance every gold table for one micro-batch (VERDICT r3 item 6).
 
@@ -374,15 +156,12 @@ def gold_maintenance_batch(
       group-replaced (a merged island below min_steps must delete rows).
     - best_patterns: recomputed from the (tiny) pattern tables.
 
-    Idempotent for the same reason as the silver hop: all writes are keyed
-    upserts/replacements of deterministically-recomputed slices, so a
-    replayed micro-batch converges to byte-identical tables. Per-batch cost
-    is O(batch tickers x bounded context), never O(history).
-
-    ``batch_id``/``checkpoints`` are accepted for call-site compatibility
-    but no longer consulted: the closes-extract append/replace decision is
-    gated on the extract's own footer-stats watermark (see the inline
-    comment), so replay safety needs no stream-private markers.
+    Idempotent: every write is a keyed upsert/replacement of a
+    deterministically-recomputed slice (the closes extract appends only
+    when its own footer-stats watermark proves the batch forward — see the
+    inline comment), so a replayed micro-batch converges to byte-identical
+    tables. Per-batch cost is O(batch tickers x bounded context), never
+    O(history).
     """
     import datetime as _dt
 
@@ -399,6 +178,7 @@ def gold_maintenance_batch(
     from tickerlake_spark.operators.vwap import vwap_signals, vwap_state
     from tickerlake_spark.pipeline import _bucket_start
     from tickerlake_spark.storage import replace_keys, write_table
+    from tickerlake_spark.storage.snapshots import snap_replace_where, snap_upsert
 
     if batch.isEmpty():
         return
@@ -412,8 +192,18 @@ def gold_maintenance_batch(
         aff_daily.filter(F.col("date") >= F.lit(year_start)),
         calculated_at=calculated_at,
     ).filter(F.col("date") >= F.lit(since))
-    _signals_snapshot_upsert(
-        spark, catalog, schemas.conform(sig, schemas.VWAP_SIGNALS)
+    # replay-idempotent: the slice is a deterministic recompute, and the
+    # keyed merge converges a replayed batch to the identical visible table.
+    # Date leads the key so the file-level prune rewrites only the recent
+    # date-range files of the date-clustered layout.
+    snap_upsert(
+        spark,
+        catalog.gold("vwap_signals"),
+        schemas.conform(sig, schemas.VWAP_SIGNALS),
+        keys=["date", "ticker"],
+        stats_cols=("date",),
+        validate_unique=False,
+        fs=catalog.fs,
     )
     # keep the batch pipeline's O(delta) companions in lockstep, so a lake
     # alternating streaming and batch maintenance never forces run_gold back
@@ -494,9 +284,11 @@ def gold_maintenance_batch(
     ev = hvc_events(
         ind_slice, daily.filter(F.col("date") >= F.lit(since)), threshold=hvc_threshold
     )
-    _hvc_snapshot_replace(
-        spark, catalog, "hvc_daily",
-        schemas.conform(ev, schemas.HVC_EVENTS), since,
+    # events can DISAPPEAR (a replayed/late row drops the ratio below
+    # threshold, an open bucket fills): a range replace, never a merge
+    snap_replace_where(
+        spark, catalog.gold("hvc_daily"),
+        schemas.conform(ev, schemas.HVC_EVENTS), "date", lo=since, fs=catalog.fs,
     )
 
     for period, ind_table, agg_table, out in (
@@ -511,9 +303,9 @@ def gold_maintenance_batch(
             F.col("date") >= F.lit(bs)
         )
         p_ev = hvc_events(p_ind, p_agg, threshold=hvc_threshold)
-        _hvc_snapshot_replace(
-            spark, catalog, out,
-            schemas.conform(p_ev, schemas.HVC_EVENTS), bs,
+        snap_replace_where(
+            spark, catalog.gold(out),
+            schemas.conform(p_ev, schemas.HVC_EVENTS), "date", lo=bs, fs=catalog.fs,
         )
 
     all_events = read_table(spark, catalog.gold("hvc_daily"), fs=catalog.fs)
@@ -655,8 +447,6 @@ def stream_bronze_to_silver(
                 hvc_threshold=hvc_threshold,
                 min_steps=min_steps,
                 calculated_at=calculated_at,
-                batch_id=batch_id,
-                checkpoints=checkpoints,
             )
 
     writer = (
