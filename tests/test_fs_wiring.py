@@ -42,7 +42,6 @@ FS_TAKING = {
     "replace_tail",
     "write_closes_extract",
     "append_closes_extract",
-    "repair_closes_extract",
     "read_closes_for",
     "repair_partition_swaps",
     "repair_table_swaps",

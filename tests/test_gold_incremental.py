@@ -1,12 +1,8 @@
 """O(delta) gold maintenance primitives (VERDICT r6 item 1).
 
-The running-sum VWAP state and the ticker-hash closes extract are what turn
-the incremental gold run from "re-window the year slice + full-history scan"
-into bounded work. These tests pin:
+The ticker-hash closes extract is what keeps the incremental stair-step
+recompute from scanning full silver history. These tests pin:
 
-- bitwise equality of state-resumed VWAP folds vs the full recompute,
-  across quarter and year boundaries (not just approximate equality — the
-  e2e parity test compares collected rows, this pins the mechanism);
 - extract reads touching ONLY the affected tickers' hash buckets;
 - partition-preserving compaction touching ONLY overfull directories.
 """
@@ -25,95 +21,6 @@ def _bars(spark, rows):
     return spark.createDataFrame(
         [(t, d, float(c), int(v)) for t, d, c, v in rows],
         "ticker string, date date, close double, volume long",
-    )
-
-
-def _fold_rows(df):
-    return sorted(
-        map(
-            tuple,
-            df.select(
-                "ticker", "date", "close", "ytd_vwap", "qtd_vwap",
-                "above_ytd_vwap", "above_qtd_vwap", "above_both",
-            ).collect(),
-        )
-    )
-
-
-def test_vwap_incremental_bitwise_matches_full(spark):
-    from tickerlake_spark.operators.vwap import (
-        vwap_incremental,
-        vwap_signals,
-        vwap_state,
-    )
-
-    # history spans Q1->Q2; the delta extends Q2 and crosses into Q3 and a
-    # new ticker appears mid-delta (no state row at all)
-    hist = _bars(
-        spark,
-        [
-            ("A", D(2024, 3, 28), 10.0, 100),
-            ("A", D(2024, 3, 29), 11.0, 200),
-            ("A", D(2024, 4, 1), 12.5, 150),
-            ("B", D(2024, 4, 1), 5.0, 50),
-        ],
-    )
-    delta = _bars(
-        spark,
-        [
-            ("A", D(2024, 4, 2), 13.0, 120),
-            ("A", D(2024, 7, 1), 14.0, 80),
-            ("B", D(2024, 4, 2), 5.5, 60),
-            ("C", D(2024, 4, 2), 99.0, 10),
-        ],
-    )
-    full = vwap_signals(
-        hist.unionByName(delta), calculated_at=dt.datetime(2026, 1, 1)
-    ).filter(F.col("date") > F.lit(D(2024, 4, 1)))
-    inc_sig, _ = vwap_incremental(
-        delta, vwap_state(hist), calculated_at=dt.datetime(2026, 1, 1)
-    )
-    assert _fold_rows(inc_sig) == _fold_rows(full)  # exact, not approx
-
-
-def test_vwap_incremental_across_year_boundary(spark):
-    from tickerlake_spark.operators.vwap import (
-        vwap_incremental,
-        vwap_signals,
-        vwap_state,
-    )
-
-    hist = _bars(spark, [("A", D(2024, 12, 30), 10.0, 100), ("A", D(2024, 12, 31), 11.0, 100)])
-    delta = _bars(spark, [("A", D(2025, 1, 2), 12.0, 100), ("A", D(2025, 1, 3), 13.0, 100)])
-    full = vwap_signals(
-        hist.unionByName(delta), calculated_at=dt.datetime(2026, 1, 1)
-    ).filter(F.col("date") >= F.lit(D(2025, 1, 1)))
-    inc_sig, new_state = vwap_incremental(
-        delta, vwap_state(hist), calculated_at=dt.datetime(2026, 1, 1)
-    )
-    assert _fold_rows(inc_sig) == _fold_rows(full)
-    # the new year's fold started from zero: vwap of the first 2025 row is
-    # its own close, and the updated state rows are 2025-only
-    st = {(r.year, r.quarter): r for r in new_state.collect()}
-    assert set(st) == {(2025, 1)}
-    assert st[(2025, 1)].ytd_pv == 12.0 * 100 + 13.0 * 100
-
-
-def test_vwap_state_chains_equal_one_shot_state(spark):
-    """Folding state through two successive deltas must equal the state of
-    one full computation — the invariant that keeps day-after-day appends
-    from drifting."""
-    from tickerlake_spark.operators.vwap import vwap_incremental, vwap_state
-
-    h1 = _bars(spark, [("A", D(2024, 1, 2), 10.0, 100)])
-    d1 = _bars(spark, [("A", D(2024, 1, 3), 11.0, 300)])
-    d2 = _bars(spark, [("A", D(2024, 1, 4), 12.0, 700)])
-    _, s1 = vwap_incremental(d1, vwap_state(h1))
-    # persist-shape roundtrip: successive runs read state from parquet
-    _, s2 = vwap_incremental(d2, s1)
-    one_shot = vwap_state(h1.unionByName(d1).unionByName(d2))
-    assert sorted(map(tuple, s2.collect())) == sorted(
-        map(tuple, one_shot.collect())
     )
 
 
@@ -210,63 +117,3 @@ def test_compact_partition_dirs_touches_only_overfull(spark, tmp_path):
     x_files = [f for f in os.listdir(os.path.join(path, "part=x")) if f.endswith(".parquet")]
     assert len(x_files) == 1
     assert spark.read.parquet(path).count() == 51
-
-
-def test_repair_closes_extract_sweeps_past_watermark(spark, tmp_path):
-    """Crash-recovery sweep (ADVICE r7 medium): rows dated past the signals
-    watermark — orphans of a gold run that died between its extract append
-    and its committing signals append — are removed; buckets that existed
-    only because of the crashed append disappear entirely."""
-    from tickerlake_spark.operators.closes import (
-        repair_closes_extract,
-        write_closes_extract,
-    )
-
-    path = str(tmp_path / "extract")
-    hist = _bars(
-        spark,
-        [("A", D(2024, 1, 2), 10.0, 100), ("B", D(2024, 1, 2), 20.0, 100)],
-    ).select("ticker", "date", "close")
-    write_closes_extract(hist, path)
-    # crashed append: two days past the watermark, including a NEW ticker
-    # whose hash bucket did not exist before
-    orphan = _bars(
-        spark,
-        [
-            ("A", D(2024, 1, 3), 11.0, 100),
-            ("ZZTOP", D(2024, 1, 3), 1.0, 100),
-        ],
-    ).select("ticker", "date", "close")
-    write_closes_extract(orphan, path, mode="append")
-    out = repair_closes_extract(spark, path, D(2024, 1, 2))
-    assert out["repaired_buckets"] >= 1
-    got = sorted(
-        map(tuple, spark.read.parquet(path).select("ticker", "date").collect())
-    )
-    assert got == [("A", D(2024, 1, 2)), ("B", D(2024, 1, 2))]
-
-
-def test_repair_then_retry_has_no_duplicates(spark, tmp_path):
-    from tickerlake_spark.operators.closes import (
-        append_closes_extract,
-        repair_closes_extract,
-        write_closes_extract,
-    )
-
-    path = str(tmp_path / "extract")
-    hist = _bars(spark, [("A", D(2024, 1, 2), 10.0, 100)]).select(
-        "ticker", "date", "close"
-    )
-    write_closes_extract(hist, path)
-    delta = _bars(spark, [("A", D(2024, 1, 3), 11.0, 100)]).select(
-        "ticker", "date", "close"
-    )
-    # crashed append, then the retry path: repair + re-append
-    write_closes_extract(delta, path, mode="append")
-    repair_closes_extract(spark, path, D(2024, 1, 2))
-    append_closes_extract(spark, delta, path)
-    rows = spark.read.parquet(path).select("ticker", "date").collect()
-    assert sorted(map(tuple, rows)) == [
-        ("A", D(2024, 1, 2)),
-        ("A", D(2024, 1, 3)),
-    ]

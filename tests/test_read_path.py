@@ -102,7 +102,6 @@ def test_every_hive_table_reads_as_inferred(spark, lake):
         "silver.indicator_tail_daily",
         "silver.indicator_tail_week",
         "silver.indicator_tail_month",
-        "gold.vwap_state",
         "gold.closes_by_ticker",
         "gold.stairstep_up",
     } <= set(tables)

@@ -1084,8 +1084,8 @@ def test_swap_repair_crash_after_second_rename(spark, tmp_path):
 
 
 def test_swap_repair_delete_intent(spark, tmp_path):
-    """A journaled delete (repair_closes_extract's empty-bucket case) must
-    finish as a delete on retry, never resurrect the bucket."""
+    """A journaled delete (the pending-delete journal's case) must finish
+    as a delete on retry, never resurrect the bucket."""
     import json
     import os
 
@@ -1101,49 +1101,6 @@ def test_swap_repair_delete_intent(spark, tmp_path):
     assert repair_partition_swaps(path) == 1
     assert not os.path.exists(os.path.join(path, "tb=0"))
     assert spark.read.parquet(path).filter("tb = 1").count() > 0
-
-
-def test_repair_closes_extract_retry_after_simulated_crash(spark, tmp_path):
-    """End-to-end: a repair sweep interrupted mid-swap, then retried, must
-    keep the bucket's full pre-watermark history (the ADVICE r8 scenario:
-    the naive swap lost it silently)."""
-    import datetime as _dt
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tickerlake_spark.operators.closes import (
-        repair_closes_extract,
-        write_closes_extract,
-    )
-
-    path = str(tmp_path / "closes")
-    rows = [
-        (f"T{i}", _dt.date(2024, 1, 2 + d), 10.0 + d)
-        for i in range(40)
-        for d in range(5)
-    ]
-    daily = spark.createDataFrame(rows, "ticker string, date date, close double")
-    write_closes_extract(daily, path)
-    wm = _dt.date(2024, 1, 4)  # rows after this are the "crashed append"
-    # simulate a repair that crashed between renames on one touched bucket
-    buckets = [d for d in os.listdir(path) if d.startswith("tb=")]
-    victim = buckets[0]
-    tmp = os.path.join(path, "_repair_zz")
-    spark.read.parquet(os.path.join(path, victim)).filter(
-        F.col("date") <= F.lit(wm)
-    ).coalesce(1).write.parquet(tmp)
-    os.rename(os.path.join(path, victim), os.path.join(path, "_old_zz"))
-    with open(os.path.join(path, "_swap_zz.json"), "w") as f:
-        json.dump({"part": victim, "tmp": "_repair_zz", "old": "_old_zz"}, f)
-    # the retry runs the full sweep again: must first finish the journaled
-    # swap, then sweep the remaining buckets
-    repair_closes_extract(spark, path, wm)
-    got = spark.read.parquet(path)
-    assert got.filter(F.col("date") > F.lit(wm)).count() == 0
-    # every ticker's full pre-watermark history survived
-    assert got.count() == 40 * 3
 
 
 def test_parquet_stats_all_non_null(spark, tmp_path):

@@ -537,6 +537,12 @@ def test_bronze_to_gold_stream_matches_batch(spark, tmp_path):
     assert len(rows_of(read_table(spark, scat.gold("hvc_daily")))) > 0
     assert len(rows_of(read_table(spark, scat.gold("stairstep_up")))) > 0
     assert len(rows_of(read_table(spark, scat.gold("stairstep_down")))) > 0
+    # every micro-batch vacuums the snapshot gold tables, as run_gold does
+    from tickerlake_spark.pipeline import _SNAP_GOLD_TABLES
+    from tickerlake_spark.storage import snap_history
+
+    for table in _SNAP_GOLD_TABLES:
+        assert len(snap_history(scat.gold(table))) <= 3, table
 
 
 def test_streaming_sketch_rollup_matches_batch_sketch(spark, event_drops, tmp_path):
@@ -1443,3 +1449,161 @@ def test_streaming_silver_tail_state_matches_batch(spark, tmp_path):
         got = rows_of(read_table(spark, cat_a.silver(f"indicator_tail_{grain}")))
         want = rows_of(build_tail(read_table(spark, cat_b.silver(agg))))
         assert got == want, grain
+
+
+_BAR_SCHEMA = (
+    "ticker string, volume long, open float, close float, high float, "
+    "low float, date date, transactions long"
+)
+
+
+def _rows_exact(df):
+    df = df.select(*sorted(df.columns))
+    return sorted(
+        map(tuple, df.collect()),
+        key=lambda t: tuple((v is None, v) for v in t),
+    )
+
+
+def test_checkpointless_late_batch_leaves_no_stale_tails(spark, tmp_path):
+    """A corrected old bar sent through silver_maintenance_batch WITHOUT
+    checkpoints changes rows the stored indicator tails hold, and cannot
+    reset silver_tail_as_of. The next checkpointed append must not read
+    those tails as valid: every silver table ends equal to a full rewrite
+    over the same bronze."""
+    import datetime as dt
+
+    from tickerlake_spark import schemas
+    from tickerlake_spark.pipeline import run_silver
+    from tickerlake_spark.sources.calendar import trading_days
+    from tickerlake_spark.storage import Catalog, Checkpoints, read_table, write_table
+    from tickerlake_spark.streaming.medallion import silver_maintenance_batch
+
+    days = trading_days(dt.date(2024, 1, 2), dt.date(2024, 2, 16))
+    fix_day = days[-4]
+
+    def bars(day_slice, corrected=False):
+        rows = []
+        for t in ("AAA", "BBB"):
+            for d in day_slice:
+                i = days.index(d)
+                c = 100.0 + (i * 7 % 13) - 0.3 * (i % 5)
+                if corrected and t == "AAA" and d == fix_day:
+                    c += 25.0
+                rows.append((t, 1000 + 17 * i, c - 1, c, c + 1, c - 2, d, 5))
+        return schemas.conform(spark.createDataFrame(rows, _BAR_SCHEMA), schemas.STOCKS)
+
+    def land(cat, df, **kw):
+        write_table(df, cat.bronze("stocks"), partition_by="date", **kw)
+
+    cat_a = Catalog(root=str(tmp_path / "a"))
+    cp_a = Checkpoints(path=str(tmp_path / "cp_a.json"))
+    land(cat_a, bars(days[:-2]).repartition("date"))
+    assert run_silver(spark, cat_a, cp_a)["mode"] == "full"
+    land(cat_a, bars([days[-2]]), mode="append")
+    assert run_silver(spark, cat_a, cp_a)["mode"] == "append"
+    assert cp_a.get("silver_tail_as_of") == days[-2].isoformat()
+
+    fixed = bars([fix_day], corrected=True)
+    land(cat_a, fixed, mode="overwrite", dynamic=True)
+    silver_maintenance_batch(spark, cat_a, fixed.filter("ticker = 'AAA'"))
+    land(cat_a, bars([days[-1]]), mode="append")
+    assert run_silver(spark, cat_a, cp_a)["mode"] == "append"
+
+    cat_b = Catalog(root=str(tmp_path / "b"))
+    cp_b = Checkpoints(path=str(tmp_path / "cp_b.json"))
+    land(cat_b, read_table(spark, cat_a.bronze("stocks")).repartition("date"))
+    assert run_silver(spark, cat_b, cp_b)["mode"] == "full"
+    for table in (
+        "daily_aggregates",
+        "weekly_aggregates",
+        "monthly_aggregates",
+        "daily_indicators",
+        "weekly_indicators",
+        "monthly_indicators",
+    ):
+        assert _rows_exact(read_table(spark, cat_a.silver(table))) == _rows_exact(
+            read_table(spark, cat_b.silver(table))
+        ), table
+
+
+def test_corrected_bar_removing_an_event_matches_full_gold(spark, tmp_path):
+    """A corrected old bar that removes an HVC event, sent through
+    silver_maintenance_batch + gold_maintenance_batch, leaves every gold
+    table equal to run_silver + run_gold (full) over the corrected bronze.
+    The removed event was the ticker's only one from the batch's date on,
+    so only the current gold version names the ticker as affected; its
+    stair-step island shrinks below min_steps and its rows must go."""
+    import datetime as dt
+
+    from tickerlake_spark import schemas
+    from tickerlake_spark.pipeline import run_gold, run_silver
+    from tickerlake_spark.sources.calendar import trading_days
+    from tickerlake_spark.storage import Catalog, Checkpoints, read_table, write_table
+    from tickerlake_spark.streaming.medallion import (
+        gold_maintenance_batch,
+        silver_maintenance_batch,
+    )
+
+    days = trading_days(dt.date(2024, 1, 2), dt.date(2024, 2, 29))
+    # AAA: rising closes on three volume spikes -> one 3-step up island;
+    # BBB: falling closes on three spikes -> one 3-step down island
+    spikes = {("AAA", 24): 120.0, ("AAA", 26): 125.0, ("AAA", 28): 130.0,
+              ("BBB", 21): 90.0, ("BBB", 23): 85.0, ("BBB", 25): 80.0}
+    fix_day = days[28]
+
+    def bars(day_slice, corrected=False):
+        rows = []
+        for t in ("AAA", "BBB"):
+            for d in day_slice:
+                i = days.index(d)
+                c, vol = 100.0 + i % 5, 1000 + 10 * (i % 7)
+                if (t, i) in spikes and not (corrected and t == "AAA" and d == fix_day):
+                    c, vol = spikes[(t, i)], vol * 12
+                rows.append((t, vol, c - 1, c, c + 2, c - 3, d, 5))
+        return schemas.conform(spark.createDataFrame(rows, _BAR_SCHEMA), schemas.STOCKS)
+
+    stamp = dt.datetime(2024, 3, 1, 12, 0, 0)
+    cat_a = Catalog(root=str(tmp_path / "a"))
+    cp_a = Checkpoints(path=str(tmp_path / "cp_a.json"))
+    write_table(bars(days).repartition("date"), cat_a.bronze("stocks"), partition_by="date")
+    run_silver(spark, cat_a, cp_a)
+    assert run_gold(
+        spark, cat_a, calculated_at=stamp, checkpoints=cp_a, with_counts=False
+    )["mode"] == "full"
+    up = read_table(spark, cat_a.gold("stairstep_up")).filter("ticker = 'AAA'")
+    assert up.count() == 1
+
+    fixed = bars([fix_day], corrected=True)
+    write_table(fixed, cat_a.bronze("stocks"), mode="overwrite",
+                partition_by="date", dynamic=True)
+    batch = fixed.filter("ticker = 'AAA'")
+    silver_maintenance_batch(spark, cat_a, batch)
+    gold_maintenance_batch(spark, cat_a, batch, calculated_at=stamp)
+
+    cat_b = Catalog(root=str(tmp_path / "b"))
+    cp_b = Checkpoints(path=str(tmp_path / "cp_b.json"))
+    write_table(
+        read_table(spark, cat_a.bronze("stocks")).repartition("date"),
+        cat_b.bronze("stocks"),
+        partition_by="date",
+    )
+    run_silver(spark, cat_b, cp_b)
+    run_gold(spark, cat_b, calculated_at=stamp, checkpoints=cp_b, with_counts=False)
+
+    assert read_table(spark, cat_a.gold("stairstep_up")).filter("ticker = 'AAA'").isEmpty()
+    assert not read_table(spark, cat_a.gold("stairstep_down")).filter("ticker = 'BBB'").isEmpty()
+    for table in (
+        "vwap_signals",
+        "closes_by_ticker",
+        "hvc_daily",
+        "hvc_weekly",
+        "hvc_monthly",
+        "stairstep_up",
+        "stairstep_down",
+        "best_patterns",
+        "best_patterns_down",
+    ):
+        assert _rows_exact(read_table(spark, cat_a.gold(table))) == _rows_exact(
+            read_table(spark, cat_b.gold(table))
+        ), table

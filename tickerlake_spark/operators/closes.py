@@ -20,8 +20,10 @@ Reads collect the (small) affected-ticker set and filter with literal
 predicates — ``tb IN (...)`` prunes directories, ``ticker IN (...)``
 pushes to parquet (session.py raises the In-pushdown threshold) — so the
 scan cost is O(affected tickers' row groups), not O(history). Maintenance
-is append-per-run plus ``compact_partition_dirs`` when a bucket accretes
-too many part files.
+(``pipeline.apply_gold_delta``) appends a batch whose dates all lie past the
+extract's own max date, plus ``compact_partition_dirs`` when a bucket
+accretes too many part files; any other batch (a retry, a replay, a late
+bar) replaces exactly its (tb, ticker, date) keys.
 """
 
 from __future__ import annotations
@@ -39,7 +41,6 @@ __all__ = [
     "write_closes_extract",
     "append_closes_extract",
     "read_closes_for",
-    "repair_closes_extract",
 ]
 
 # 64 buckets: at 100 TB / ~10k tickers a bucket holds ~150 tickers' history
@@ -110,61 +111,6 @@ def append_closes_extract(
         sort_by=["ticker", "date"],
         fs=fs,
     )
-
-
-def repair_closes_extract(
-    spark: SparkSession, path: str, watermark, fs: FS = LOCAL_FS
-) -> dict:
-    """Remove extract rows dated past ``watermark`` — the crash-recovery
-    sweep for a gold incremental run that appended its closes delta but died
-    before the committing ``vwap_signals`` append (pipeline.run_gold sets a
-    write-ahead intent in the checkpoint store before the extract append;
-    intent > signals-watermark on the next run means exactly this state).
-
-    Without the sweep, retrying the delta append would double-store those
-    rows. Only buckets actually holding too-new rows are rewritten (found by
-    one date-filtered scan — rare-path cost, bounded by one run's append
-    footprint plus the touched buckets' history). Each bucket swap is
-    journaled via ``swap_partition_dir`` (ADVICE r8 medium: the bare
-    two-rename swap had a crash window that parked the bucket's whole
-    history in a Spark-invisible '_old_*' dir — a retry would then rebuild
-    the bucket from the delta alone, silently losing history); any swap a
-    previous crashed repair left mid-flight is finished first.
-    """
-    import math
-    import os
-    import uuid
-
-    from tickerlake_spark.storage.maintenance import (
-        repair_partition_swaps,
-        swap_partition_dir,
-        table_file_stats,
-    )
-
-    repair_partition_swaps(path, fs=fs)
-    wm = F.lit(watermark).cast("date")
-    ext = read_table(spark, path, fs=fs)
-    touched = sorted(
-        r[0] for r in ext.filter(F.col("date") > wm).select("tb").distinct().collect()
-    )
-    for b in touched:
-        part_dir = os.path.join(path, f"tb={b}")
-        _n, total = table_file_stats(part_dir, fs=fs)
-        n_out = max(1, math.ceil(total / (64 * 1024 * 1024)))
-        kept = (
-            read_table(spark, part_dir, fs=fs)
-            .filter(F.col("date") <= wm)
-            .coalesce(n_out)
-            .sortWithinPartitions("ticker", "date")
-        )
-        tmp = os.path.join(path, f"_repair_{uuid.uuid4().hex[:8]}")
-        kept.write.parquet(tmp)
-        # empty tmp (no part files) => the bucket existed only because of
-        # the crashed append: journaled delete
-        swap_partition_dir(
-            path, f"tb={b}", tmp, delete=not table_exists(tmp, fs=fs), fs=fs
-        )
-    return {"repaired_buckets": len(touched)}
 
 
 def read_closes_for(

@@ -12,8 +12,7 @@ already the whole table, and the daily 600-day horizon reads ~half of a
 append-path read).
 
 This module keeps the context AS STATE instead — one small table per grain
-holding each ticker's last ``TAIL_ROWS`` aggregate rows (the ``vwap_state``
-pattern generalized from running sums to rolling frames; reference
+holding each ticker's last ``TAIL_ROWS`` aggregate rows (reference
 semantics: silver/indicators.py:10-145 recomputes everything from full
 history every run):
 

@@ -10,6 +10,11 @@ The reference sorts the whole table then cum_sums (gold/vwap_signals.py:53,
 so there is exactly one shuffle (hash on ticker) and no global sort. The
 year/quarter partition refinement reuses the same ticker hash partitioning —
 Spark plans both windows in one exchange.
+
+This is the one VWAP operator: catalog q35, the gold full rebuild and the
+incremental gold path (``pipeline.apply_gold_delta``, which windows only
+the calendar-year slice holding the changed rows — the sums restart every
+Jan 1, so that slice yields exactly the full computation's rows).
 """
 
 from __future__ import annotations
@@ -19,18 +24,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["vwap_signals", "vwap_state", "vwap_incremental", "vwap_full"]
-
-# Running-sum state for O(delta) gold maintenance: one row per
-# (ticker, year, quarter) holding the EXACT cumulative sums as of the last
-# bar processed. Appending a batch of new bars then never re-reads history:
-# new_vwap = (state_sum [+ each new bar, in date order]) / same for volume —
-# bitwise-identical to a full recompute because Spark's running-window sum is
-# a sequential left fold and the seed IS the stored prefix of that fold.
-_STATE_SCHEMA = (
-    "ticker string, year int, quarter int, ytd_pv double, ytd_vol long, "
-    "qtd_pv double, qtd_vol long, last_date date"
-)
+__all__ = ["vwap_signals"]
 
 
 def vwap_signals(daily: DataFrame, calculated_at: dt.datetime | None = None) -> DataFrame:
@@ -91,157 +85,3 @@ def vwap_signals(daily: DataFrame, calculated_at: dt.datetime | None = None) -> 
     )
     return out
 
-
-def _base(daily: DataFrame) -> DataFrame:
-    """The filtered projection both the signal and the state computations
-    share (same row filter as vwap_signals)."""
-    return daily.filter(
-        F.col("close").isNotNull()
-        & F.col("volume").isNotNull()
-        & (F.col("volume") > 0)
-    ).select(
-        "ticker",
-        "date",
-        F.col("close").cast("double").alias("close"),
-        F.year("date").alias("__year"),
-        F.quarter("date").alias("__quarter"),
-        (F.col("close").cast("double") * F.col("volume")).alias("__pv_y"),
-        F.col("volume").cast("long").alias("__vol_y"),
-        (F.col("close").cast("double") * F.col("volume")).alias("__pv_q"),
-        F.col("volume").cast("long").alias("__vol_q"),
-        F.lit(False).alias("__seed"),
-    )
-
-
-def _augment(delta_base: DataFrame, state: DataFrame | None) -> DataFrame:
-    """delta bars + one seed row per (ticker, year) carrying the stored
-    prefix sums, with running YTD/QTD sums over the union.
-
-    The seed is the LATEST state quarter of each (ticker, year): its ytd_*
-    columns already fold every earlier quarter, and its qtd_* columns seed
-    exactly its own quarter (delta rows in a later quarter correctly start
-    their QTD fold from zero). Seeds sort before all delta rows — their
-    last_date is <= the watermark, and every delta date is past it.
-    """
-    spark = delta_base.sparkSession
-    if state is None:
-        state = spark.createDataFrame([], _STATE_SCHEMA)
-    w_latest = Window.partitionBy("ticker", "year").orderBy(F.col("quarter").desc())
-    seeds = (
-        state.withColumn("__rn", F.row_number().over(w_latest))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "ticker",
-            F.col("last_date").alias("date"),
-            F.lit(None).cast("double").alias("close"),
-            F.col("year").alias("__year"),
-            F.col("quarter").alias("__quarter"),
-            F.col("ytd_pv").alias("__pv_y"),
-            F.col("ytd_vol").alias("__vol_y"),
-            F.col("qtd_pv").alias("__pv_q"),
-            F.col("qtd_vol").alias("__vol_q"),
-            F.lit(True).alias("__seed"),
-        )
-    )
-    aug = delta_base.unionByName(seeds)
-    w_ytd = (
-        Window.partitionBy("ticker", "__year")
-        .orderBy("__quarter", "date")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_qtd = (
-        Window.partitionBy("ticker", "__year", "__quarter")
-        .orderBy("date")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return aug.select(
-        "*",
-        F.sum("__pv_y").over(w_ytd).alias("__ytd_pv_c"),
-        F.sum("__vol_y").over(w_ytd).alias("__ytd_vol_c"),
-        F.sum("__pv_q").over(w_qtd).alias("__qtd_pv_c"),
-        F.sum("__vol_q").over(w_qtd).alias("__qtd_vol_c"),
-    )
-
-
-def _state_of(aug: DataFrame) -> DataFrame:
-    """End-state rows from an augmented frame: the last cumulative values per
-    (ticker, year, quarter), for groups that saw at least one real bar."""
-    return (
-        aug.groupBy(
-            "ticker",
-            F.col("__year").alias("year"),
-            F.col("__quarter").alias("quarter"),
-        )
-        .agg(
-            F.max_by("__ytd_pv_c", "date").alias("ytd_pv"),
-            F.max_by("__ytd_vol_c", "date").alias("ytd_vol"),
-            F.max_by("__qtd_pv_c", "date").alias("qtd_pv"),
-            F.max_by("__qtd_vol_c", "date").alias("qtd_vol"),
-            F.max("date").alias("last_date"),
-            F.sum(F.when(~F.col("__seed"), 1).otherwise(0)).alias("__n"),
-        )
-        .filter(F.col("__n") > 0)
-        .drop("__n")
-    )
-
-
-def vwap_state(daily: DataFrame) -> DataFrame:
-    """Running-sum checkpoint table from full history (the full-rebuild
-    initialization of the incremental path): ticker, year, quarter, ytd_pv,
-    ytd_vol, qtd_pv, qtd_vol, last_date."""
-    return _state_of(_augment(_base(daily), None))
-
-
-def vwap_incremental(
-    delta: DataFrame,
-    state: DataFrame,
-    calculated_at: dt.datetime | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(new signal rows, updated state rows) for appended bars — O(delta).
-
-    ``delta`` holds ONLY bars past the gold watermark; ``state`` is the
-    stored checkpoint. New rows' YTD/QTD folds resume from the stored prefix
-    sums, so no historical bar is re-read and the appended values are
-    bitwise-equal to a full recompute (the stored prefix is the exact partial
-    of the same sequential fold; 0.0 + s == s for finite sums, so seeding the
-    window buffer cannot perturb it). Year/quarter boundaries inside the
-    delta reset naturally: rows in a (year, quarter) with no matching seed
-    start their fold from zero, exactly like the full computation.
-    """
-    aug = _augment(_base(delta), state)
-    return _signals_of(aug, calculated_at), _state_of(aug)
-
-
-def _signals_of(aug: DataFrame, calculated_at: dt.datetime | None) -> DataFrame:
-    stamp = (
-        F.lit(calculated_at).cast("timestamp")
-        if calculated_at is not None
-        else F.current_timestamp()
-    )
-    ytd_vwap = F.col("__ytd_pv_c") / F.col("__ytd_vol_c")
-    qtd_vwap = F.col("__qtd_pv_c") / F.col("__qtd_vol_c")
-    return aug.filter(~F.col("__seed")).select(
-        "ticker",
-        "date",
-        "close",
-        ytd_vwap.alias("ytd_vwap"),
-        qtd_vwap.alias("qtd_vwap"),
-        (F.col("close") > ytd_vwap).alias("above_ytd_vwap"),
-        (F.col("close") > qtd_vwap).alias("above_qtd_vwap"),
-        ((F.col("close") > ytd_vwap) & (F.col("close") > qtd_vwap)).alias(
-            "above_both"
-        ),
-        stamp.alias("calculated_at"),
-    )
-
-
-def vwap_full(
-    daily: DataFrame, calculated_at: dt.datetime | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(signals, state, shared_frame) for a FULL rebuild, all built over ONE
-    augmented lineage: persist ``shared_frame`` before triggering the two
-    writes and unpersist after, and the history pays a single window pass
-    instead of one per output. Values are identical to
-    ``vwap_signals``/``vwap_state`` (same windows, same fold order)."""
-    aug = _augment(_base(daily), None)
-    return _signals_of(aug, calculated_at), _state_of(aug), aug

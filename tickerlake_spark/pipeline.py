@@ -43,6 +43,7 @@ from tickerlake_spark.sources.market import MarketSource, fetch_dates_parallel
 from tickerlake_spark.storage import (
     Catalog,
     Checkpoints,
+    drop_table,
     get_max_date,
     read_table,
     replace_keys,
@@ -55,11 +56,12 @@ from tickerlake_spark.storage import (
 # gold fact tables committed as SNAPSHOT tables (storage/snapshots.py):
 # vwap_signals since r11 (VERDICT r10 item 4), the HVC event tables since
 # the same round's extension. Full rebuilds are ONE atomic date-clustered
-# overwrite commit each; incremental maintenance is a keyed snap_upsert
-# (hvc_daily: strictly-new dates) or a range-scoped snap_replace_where
-# (hvc_weekly/monthly: the open bucket's events can DISAPPEAR as the
-# bucket fills). The stair-step/summary tables stay on the swap layer:
-# they are replaced by ticker SETS, not ranges, and are tiny.
+# overwrite commit each; incremental maintenance (apply_gold_delta) is a
+# keyed snap_upsert (vwap_signals) or a range-scoped snap_replace_where
+# (the HVC tables: a replayed or corrected bar, or an open bucket filling,
+# can make an event DISAPPEAR). Both paths vacuum them to the last three
+# versions. The stair-step/summary tables stay on the swap layer: they are
+# replaced by ticker SETS, not ranges, and are tiny.
 _SNAP_GOLD_TABLES = ("vwap_signals", "hvc_daily", "hvc_weekly", "hvc_monthly")
 
 
@@ -80,6 +82,42 @@ def _gold_snap_overwrite(spark, catalog: Catalog, df, table: str) -> None:
         stats_cols=("date",),
         fs=catalog.fs,
     )
+
+
+# per-ticker summaries of the pattern tables: best_patterns =
+# stairstepping_summary, best_patterns_down = falling_down_stairs_summary
+# (reference: metadata.json)
+_BEST_PATTERN_TABLES = (
+    ("stairstep_up", "best_patterns"),
+    ("stairstep_down", "best_patterns_down"),
+)
+
+
+def _write_best_patterns(spark, catalog: Catalog, src: str, out: str) -> None:
+    """Recompute one summary table from its (tiny) pattern table."""
+    best = best_patterns(read_table(spark, catalog.gold(src), fs=catalog.fs))
+    write_table(
+        schemas.conform(best, schemas.STAIRSTEP_PATTERNS),
+        catalog.gold(out),
+        fs=catalog.fs,
+    )
+
+
+def _publish_gold(catalog: Catalog) -> None:
+    """The last step of every gold run, full or incremental: persist the
+    published 12-name view DDL next to the gold tables (VERDICT r8 item 5:
+    the reference's declared CS/ETF-segmented surface, served as documented
+    views), then vacuum the snapshot-committed fact tables to a short
+    time-travel window (current + two prior versions for the audit stamp /
+    repeatable reads during maintenance) — without it a daily or streaming
+    lake accretes versions forever. Single-writer maintenance: the default
+    (non-orphan) vacuum is safe here by construction."""
+    from tickerlake_spark.sql import write_reference_gold_view_ddl
+    from tickerlake_spark.storage.snapshots import snap_vacuum
+
+    write_reference_gold_view_ddl(catalog)
+    for t in _SNAP_GOLD_TABLES:
+        snap_vacuum(catalog.gold(t), keep_last=3, fs=catalog.fs)
 
 
 def _bucket_start(period: str, d: dt.date) -> dt.date:
@@ -134,6 +172,7 @@ __all__ = [
     "run_validate",
     "should_full_rewrite",
     "apply_silver_delta",
+    "apply_gold_delta",
 ]
 
 
@@ -570,7 +609,9 @@ def apply_silver_delta(
     advanced tail. With ``checkpoints`` the advanced tails are swapped in
     and ``silver_tail_as_of`` is committed only after ALL three swaps: a
     crash mid-way leaves a mismatched as_of and the next batch falls back
-    and rebuilds.
+    and rebuilds. A non-forward batch without ``checkpoints`` drops the
+    stored tails instead: it changes rows they may hold while their as_of
+    still matches the watermark.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -594,6 +635,13 @@ def apply_silver_delta(
         and checkpoints.get("silver_tail_as_of") == wm
         and all(table_exists(p, fs=catalog.fs) for p in tail_paths.values())
     )
+    if checkpoints is None and not forward:
+        # this batch rewrites rows the stored tails may hold but cannot
+        # reset silver_tail_as_of, which still equals the watermark: drop
+        # the tails before the first write, so the next checkpointed batch
+        # falls back to build_tail even if this one crashes
+        for p in tail_paths.values():
+            drop_table(p, fs=catalog.fs)
 
     def _merge(table: str, df: DataFrame, *, append: bool) -> None:
         if append:
@@ -728,46 +776,25 @@ def run_gold(
     """silver -> gold: VWAP signals + HVC events + stair-step patterns.
 
     When ``checkpoints`` is provided and the last silver run was an append
-    (history untouched), gold runs incrementally — O(delta), never
-    O(history):
+    (history untouched), gold runs incrementally through
+    ``apply_gold_delta`` — the one incremental gold path, shared with the
+    streaming ``gold_maintenance_batch`` — over the silver rows past the
+    ``vwap_signals`` watermark: ``since`` is the day after it and the
+    changed tickers are those with a row past it. Rows dated from
+    ``since`` on carry this run's ``calculated_at``; older rows keep the
+    stamp of the run that computed them (the reference restamps the whole
+    table each rebuild, gold/models.py:35).
 
-    - vwap_signals: the YTD/QTD cumulative sums resume from the
-      ``vwap_state`` checkpoint table (per-(ticker, year, quarter) running
-      Σpv/Σvol — ``operators/vwap.vwap_incremental``), so only the appended
-      bars are read and the appended rows are bitwise-equal to a full
-      recompute. Appended rows carry this run's ``calculated_at``; older
-      rows keep the stamp of the run that computed them (the reference
-      restamps the whole table each rebuild, gold/models.py:35).
-    - hvc_daily: events are pointwise in (indicator row, daily row) — append
-      the new dates' events (both inputs are date-partition-pruned reads).
-    - stairstep patterns: new events can extend or merge a ticker's islands,
-      so every ticker WITH a new event has its full pattern set recomputed
-      and group-replaced (``storage.replace_keys`` — a merged island below
-      min_steps must delete, not just upsert). The full-history closes those
-      tickers need come from the ticker-hash-partitioned
-      ``closes_by_ticker`` extract (``operators/closes``), not a full silver
-      scan. No new events -> the stair-step and best-pattern tables are
-      provably unchanged and skipped entirely.
-    - best_patterns: recomputed from the (tiny) patterns table.
-
-    After a silver full rewrite, history changed and gold rebuilds fully.
-    The incremental path additionally requires the ``vwap_state`` and
-    ``closes_by_ticker`` companion tables (absent on lakes built before
-    round 7) and a state watermark that MATCHES the signals watermark (a
-    streaming-maintained lake that advanced signals without state falls
-    back to one migrating full rebuild).
+    After a silver full rewrite, history changed and gold rebuilds fully;
+    so does a lake missing any gold table or the ``closes_by_ticker``
+    extract the incremental stair-step reads come from.
 
     ``with_counts=False`` skips the full-table observability counts in the
     returned summary (they are reporting, not maintenance — benchmarks time
     the maintenance).
     """
-    from tickerlake_spark.operators.closes import (
-        append_closes_extract,
-        read_closes_for,
-        repair_closes_extract,
-        write_closes_extract,
-    )
-    from tickerlake_spark.operators.vwap import vwap_full, vwap_incremental
+    from tickerlake_spark.operators.closes import write_closes_extract
+    from tickerlake_spark.operators.vwap import vwap_signals
 
     timer = _StageTimer()
     daily = read_table(spark, catalog.silver("daily_aggregates"), fs=catalog.fs)
@@ -780,8 +807,6 @@ def run_gold(
             "hvc_monthly",
             "stairstep_up",
             "stairstep_down",
-            # incremental-path companions: running-sum checkpoint + extract
-            "vwap_state",
             "closes_by_ticker",
         )
     )
@@ -802,298 +827,56 @@ def run_gold(
         and int(checkpoints.get("gold_silver_generation") or 0)
         == int(checkpoints.get("silver_generation") or 0)
     )
-    if incremental:
-        # the state checkpoint must be exactly as far along as the signals
-        # table; a lake whose signals were advanced without state (e.g. by
-        # an older streaming maintainer) must migrate via a full rebuild.
-        # Footer statistics answer the probe without a Spark job (the state
-        # table is small and flat); the aggregate is the stats-less fallback.
-        from tickerlake_spark.storage import parquet_stats_max
-
-        state = read_table(spark, catalog.gold("vwap_state"), fs=catalog.fs)
-        stat = parquet_stats_max(
-            catalog.gold("vwap_state"), "last_date", fs=catalog.fs
-        )
-        state_wm = (
-            stat.isoformat()
-            if stat is not None
-            else state.agg(F.max("last_date").cast("string")).first()[0]
-        )
-        if state_wm != watermark:
-            incremental = False
     timer.mark("gate")
 
     if incremental:
-        # Crash-safety contract (ADVICE r7 medium): the vwap_signals append
-        # is the run's COMMIT POINT — it advances the watermark that defines
-        # the next run's delta, so it must come after every write that the
-        # delta's retry would need to redo. Ordering:
-        #   1. closes-extract append, protected by a write-ahead intent in
-        #      the checkpoint store (the one non-idempotent pre-commit
-        #      write: a crashed run's partial rows are swept by
-        #      repair_closes_extract on the retry);
-        #   2. the keyed HVC / stair-step / best-pattern writes — all
-        #      idempotent re-derivations of the same delta;
-        #   3. the signals append (commit);
-        #   4. the vwap_state upsert — last, because its directory swap
-        #      would invalidate the already-planned signals lineage that
-        #      reads the state table, and because a crash between 3 and 4
-        #      leaves state_wm != watermark, which the incremental gate
-        #      already detects and migrates via one full rebuild. No crash
-        #      window leaves silently-missing extract/HVC history.
         wm = dt.date.fromisoformat(watermark)
-        delta = daily.filter(F.col("date") > F.lit(wm))  # partition-pruned
-        silver_wm = get_max_date(
-            spark, catalog.silver("daily_aggregates"), fs=catalog.fs
+        tickers = (
+            daily.filter(F.col("date") > F.lit(wm))  # partition-pruned
+            .select("ticker")
+            .distinct()
         )
-        intent = checkpoints.get("gold_closes_intent")
-        if intent is not None and str(intent) > watermark:
-            # a previous run died between its extract append and its
-            # signals append: sweep the orphaned too-new rows before
-            # re-appending them
-            repair_closes_extract(
-                spark, catalog.gold("closes_by_ticker"), watermark,
-                fs=catalog.fs,
-            )
-        checkpoints.set("gold_closes_intent", silver_wm)
-        # persisted: feeds the keyed upsert AND the affected-ticker collect
-        # below — one indicator-slice scan instead of two
-        new_events = hvc_events(
-            read_table(spark, catalog.silver("daily_indicators"), fs=catalog.fs).filter(
-                F.col("date") > F.lit(wm)
-            ),
-            delta,
-            threshold=hvc_threshold,
-        ).persist()
-        # one bounded collect drives BOTH the hvc_daily skip and the
-        # stair-step scope below: tickers with a new event (~2% of
-        # ticker-days -> a small set per appended day)
-        aff_list = sorted(
-            r[0] for r in new_events.select("ticker").distinct().collect()
+        apply_gold_delta(
+            spark,
+            catalog,
+            wm + dt.timedelta(days=1),
+            tickers,
+            hvc_threshold=hvc_threshold,
+            min_steps=min_steps,
+            calculated_at=calculated_at,
+            timer=timer,
         )
-
-        from tickerlake_spark.storage.snapshots import (
-            snap_replace_where,
-            snap_upsert,
-        )
-
-        def _extract_task() -> None:
-            append_closes_extract(
-                spark, delta.select("ticker", "date", "close"),
-                catalog.gold("closes_by_ticker"),
-                fs=catalog.fs,
-            )
-
-        def _hvc_daily_task() -> None:
-            # keyed MERGE commit, not a blind append: new events are
-            # strictly-new dates, so on the first run nothing overlaps and
-            # the commit is append-shaped — but a retry after a crash
-            # between this write and the signals commit point re-derives
-            # the SAME delta, and the merge converges it instead of
-            # doubling it. Zero events -> no commit at all (snap_upsert's
-            # empty-batch no-op; the table provably has nothing to gain).
-            snap_upsert(
-                spark,
-                catalog.gold("hvc_daily"),
-                schemas.conform(new_events, schemas.HVC_EVENTS),
-                keys=["date", "ticker"],  # date leads: prunes the
-                # date-clustered files so only the delta range rewrites
-                stats_cols=("date",),
-                validate_unique=False,  # unique per construction
-                fs=catalog.fs,
-            )
-
-        def _hvc_face_task(period: str, ind_table: str, agg_table: str,
-                           out: str) -> None:
-            # weekly/monthly HVC: silver upserted every bucket from the
-            # watermark's bucket onward, and a bucket's ratio can drop BELOW
-            # the threshold as the open bucket fills — REPLACE that date
-            # range, do not merge (an event present yesterday may not exist
-            # today). As a snapshot commit the range replace is atomic:
-            # files whose committed date range is provably older carry by
-            # reference, the open range's files rewrite minus their
-            # replaced rows, one manifest CAS publishes both — no reader
-            # ever sees the bucket half-swapped, and a retry of the same
-            # delta converges (idempotent re-derivation).
-            bs = _bucket_start(period, wm)
-            ind_slice = read_table(spark, catalog.silver(ind_table), fs=catalog.fs).filter(
-                F.col("date") >= F.lit(bs)
-            )
-            agg_slice = read_table(spark, catalog.silver(agg_table), fs=catalog.fs).filter(
-                F.col("date") >= F.lit(bs)
-            )
-            ev = hvc_events(ind_slice, agg_slice, threshold=hvc_threshold)
-            snap_replace_where(
-                spark,
-                catalog.gold(out),
-                schemas.conform(ev, schemas.HVC_EVENTS),
-                "date",
-                lo=bs,
-                fs=catalog.fs,
-            )
-
-        # the four pre-commit writes touch four DIFFERENT tables and are
-        # each retry-idempotent (the extract via the intent marker above),
-        # so their order relative to each other is immaterial — run them
-        # concurrently; their per-job fixed overheads dominate at small
-        # delta sizes and overlap on idle cores. The merge primitives use
-        # writer-level overwrite options, so no session state is shared.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(_extract_task),
-                pool.submit(_hvc_daily_task),
-                pool.submit(
-                    _hvc_face_task, "week", "weekly_indicators",
-                    "weekly_aggregates", "hvc_weekly",
-                ),
-                pool.submit(
-                    _hvc_face_task, "month", "monthly_indicators",
-                    "monthly_aggregates", "hvc_monthly",
-                ),
-            ]
-            for f in futs:
-                f.result()
-        timer.mark("extract+hvc_parallel")
-        new_events.unpersist()
-        if aff_list:
-            affected = spark.createDataFrame(
-                [(t,) for t in aff_list], "ticker string"
-            )
-            all_events = read_table(spark, catalog.gold("hvc_daily"), fs=catalog.fs)
-            aff_events = all_events.join(F.broadcast(affected), "ticker", "left_semi")
-            if len(aff_list) <= 2_000:
-                # hash-bucket partition pruning + parquet In/bloom row-group
-                # skipping: reads only the affected tickers' history
-                aff_closes = read_closes_for(
-                    spark, catalog.gold("closes_by_ticker"), aff_list,
-                    fs=catalog.fs,
-                )
-            else:
-                # degenerate batch (e.g. backfill): the extract filter list
-                # would bloat the plan; a semi-join scan is the right plan
-                aff_closes = daily.select("ticker", "date", "close").join(
-                    F.broadcast(affected), "ticker", "left_semi"
-                )
-            # both directions window the same event sequence — materialize
-            # the events x closes join ONCE (the extract read and the
-            # events semi-join are the expensive legs; the per-direction
-            # windows are trivial)
-            aff_seq = stairstep_seq(
-                aff_events.select("ticker", "date"), aff_closes
-            ).persist()
-            try:
-                # the two directions are independent reads/writes of
-                # DIFFERENT flat tables over the same persisted input —
-                # run them concurrently so their (fixed-overhead-dominated)
-                # jobs overlap on idle cores. Safe: the unpartitioned
-                # replace path mutates no session conf.
-                from concurrent.futures import ThreadPoolExecutor
-
-                def _one_direction(direction: str, table: str) -> None:
-                    pats = stairstep_patterns(
-                        aff_events, aff_closes,
-                        min_steps=min_steps, direction=direction, seq=aff_seq,
-                    )
-                    replace_keys(
-                        spark,
-                        catalog.gold(table),
-                        affected,
-                        schemas.conform(pats, schemas.STAIRSTEP_PATTERNS),
-                        keys=["ticker"],
-                        with_count=False,
-                        fs=catalog.fs,
-                    )
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    futs = [
-                        pool.submit(_one_direction, d, t)
-                        for d, t in (
-                            ("up", "stairstep_up"),
-                            ("down", "stairstep_down"),
-                        )
-                    ]
-                    for f in futs:
-                        f.result()
-            finally:
-                aff_seq.unpersist()
-        timer.mark("stairsteps")
     else:
-        # gold fact tables are date-partitioned like silver: the watermark
-        # probe at the top of every incremental run is then a directory
-        # listing, appends write only new date dirs, and date-ranged reads
-        # prune. The window outputs emerge ticker-clustered; repartition by
-        # date so each directory gets one file.
-        #
         # ONE silver.daily scan for the whole rebuild (VERDICT r7: the four
         # separate scans — vwap, closes extract, hvc join, stair-step
         # closes — were ~half the full-rebuild regression): every consumer
         # needs only (ticker, date, close, volume), so that projection is
         # persisted once and all four legs read the cache.
         #
-        # The rebuild's three independent chains then run CONCURRENTLY
-        # (VERDICT r8 item 1): the signals chain (window pass + the
-        # write-heaviest table), the closes extract, and the HVC chain
-        # (events -> hvc tables -> stair-steps -> summaries). A 10x layout
-        # experiment (tools/experiments r9) showed the signals stage is
-        # ~half write/shuffle — time the other chains hide under, since
-        # write phases leave cores idle (commit protocol, I/O waits);
-        # coarser partition layouts (year=/month= dirs) measured SLOWER,
-        # so the date layout stays. Safety: each chain touches disjoint
+        # The rebuild's independent chains then run CONCURRENTLY (VERDICT
+        # r8 item 1): the signals chain (window pass + the write-heaviest
+        # table), the closes extract, the HVC chain (events -> hvc tables
+        # -> stair-steps -> summaries) and the weekly/monthly faces. Write
+        # phases leave cores idle (commit protocol, I/O waits), time the
+        # other chains hide under. Safety: each chain touches disjoint
         # tables and mutates no session conf; concurrent first-use of the
-        # shared caches is safe (Spark's per-block locks compute each
+        # shared cache is safe (Spark's per-block locks compute each
         # cached partition exactly once). Timings use spans (overlapping;
         # they sum to more than the phase wall clock).
         narrow = daily.select("ticker", "date", "close", "volume").persist()
         try:
 
             def _signals_chain() -> None:
-                # signals and the running-sum state derive from ONE
-                # augmented window pass (vwap_full): persist it across the
-                # two writes so full history is windowed once; the two
-                # writes are independent actions over that cache — run
-                # them concurrently (the state write is a small aggregate
-                # that otherwise serializes after the big signals write)
-                signals, state, shared = vwap_full(
-                    narrow, calculated_at=calculated_at
-                )
-                shared.persist()
-                try:
-
-                    def _sig_write() -> None:
-                        # vwap_signals is a SNAPSHOT table (r11, VERDICT
-                        # r10 item 4): each full rebuild is one atomic
-                        # manifest commit — readers mid-rebuild keep the
-                        # prior version (the swap journal's mixed-read
-                        # caveat gone), history is time-travelable for the
-                        # audit stamp, and date-clustered files give
-                        # manifest-stat pruning the date layout used to
-                        # give via directories.
-                        with timer.span("vwap_signals"):
-                            _gold_snap_overwrite(
-                                spark,
-                                catalog,
-                                schemas.conform(signals, schemas.VWAP_SIGNALS),
-                                "vwap_signals",
-                            )
-
-                    def _state_write() -> None:
-                        with timer.span("vwap_state"):
-                            write_table(
-                                state, catalog.gold("vwap_state"), fs=catalog.fs
-                            )
-
-                    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-                    with _TPE(max_workers=2) as inner:
-                        for f in [
-                            inner.submit(_sig_write),
-                            inner.submit(_state_write),
-                        ]:
-                            f.result()
-                finally:
-                    shared.unpersist()
+                with timer.span("vwap_signals"):
+                    _gold_snap_overwrite(
+                        spark,
+                        catalog,
+                        schemas.conform(
+                            vwap_signals(narrow, calculated_at=calculated_at),
+                            schemas.VWAP_SIGNALS,
+                        ),
+                        "vwap_signals",
+                    )
 
             def _extract_chain() -> None:
                 with timer.span("closes_extract"):
@@ -1109,8 +892,6 @@ def run_gold(
                 events = hvc_events(ind, narrow, threshold=hvc_threshold).persist()
                 try:
                     with timer.span("hvc_daily"):
-                        # snapshot commit like the signals table (r11):
-                        # atomic full rebuild, date-clustered files
                         _gold_snap_overwrite(
                             spark,
                             catalog,
@@ -1150,16 +931,8 @@ def run_gold(
                 # (longer) signals chain instead of serializing after the
                 # pool
                 with timer.span("best_patterns"):
-                    for src, out in (
-                        ("stairstep_up", "best_patterns"),
-                        ("stairstep_down", "best_patterns_down"),
-                    ):
-                        best = best_patterns(read_table(spark, catalog.gold(src), fs=catalog.fs))
-                        write_table(
-                            schemas.conform(best, schemas.STAIRSTEP_PATTERNS),
-                            catalog.gold(out),
-                            fs=catalog.fs,
-                        )
+                    for src, out in _BEST_PATTERN_TABLES:
+                        _write_best_patterns(spark, catalog, src, out)
 
             def _faces_chain() -> None:
                 # weekly/monthly HVC faces (reference: metadata.json
@@ -1200,99 +973,14 @@ def run_gold(
         finally:
             narrow.unpersist()
         timer.mark("full_parallel_wall")
-
-    # per-ticker summaries, recomputed from the (tiny) pattern tables:
-    # best_patterns = stairstepping_summary, best_patterns_down =
-    # falling_down_stairs_summary (reference: metadata.json). On an
-    # incremental run with NO new events the pattern tables are untouched,
-    # so their summaries are untouched too — skip the recompute. (The full
-    # arm recomputes them inside its HVC chain, overlapped with signals.)
-    if incremental and aff_list:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _one_best(src: str, out: str) -> None:
-            best = best_patterns(read_table(spark, catalog.gold(src), fs=catalog.fs))
-            write_table(
-                schemas.conform(best, schemas.STAIRSTEP_PATTERNS),
-                catalog.gold(out),
-                fs=catalog.fs,
+        if checkpoints is not None:
+            # record which silver history generation this build saw
+            checkpoints.set(
+                "gold_silver_generation",
+                int(checkpoints.get("silver_generation") or 0),
             )
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(_one_best, s, o)
-                for s, o in (
-                    ("stairstep_up", "best_patterns"),
-                    ("stairstep_down", "best_patterns_down"),
-                )
-            ]
-            for f in futs:
-                f.result()
-        timer.mark("best_patterns")
-    if incremental:
-        # commit point (see ordering comment above): everything before this
-        # append is retry-idempotent against the same delta
-        new_signals, new_state = vwap_incremental(
-            delta, state, calculated_at=calculated_at
-        )
-        # the commit point is now literally a COMMIT: one atomic manifest
-        # append of the delta's date-clustered files (a crash before the
-        # manifest PUT leaves the table exactly at the prior version, so
-        # the watermark that defines the next run's delta never moves on a
-        # partial write)
-        from tickerlake_spark.storage.snapshots import snap_write
-
-        snap_write(
-            spark,
-            schemas.conform(new_signals, schemas.VWAP_SIGNALS),
-            catalog.gold("vwap_signals"),
-            mode="append",
-            cluster_by=("date",),
-            stats_cols=("date",),
-            fs=catalog.fs,
-        )
-        timer.mark("vwap_signals")
-        upsert_table(
-            spark,
-            catalog.gold("vwap_state"),
-            new_state,
-            keys=["ticker", "year", "quarter"],
-            validate_unique=False,  # unique per groupBy construction
-            stage_updates=False,  # delta-window lineage, cheap to re-run
-            with_count=False,
-            fs=catalog.fs,
-        )
-        timer.mark("vwap_state")
-    if checkpoints is not None and not incremental:
-        # full gold build: record which silver history generation it saw,
-        # and re-base the closes-extract intent (the rebuilt extract is
-        # consistent with silver by construction; a stale intent from a
-        # pre-rebuild crash must not trigger a spurious repair later)
-        checkpoints.set(
-            "gold_silver_generation",
-            int(checkpoints.get("silver_generation") or 0),
-        )
-        checkpoints.set(
-            "gold_closes_intent",
-            get_max_date(spark, catalog.silver("daily_aggregates"), fs=catalog.fs),
-        )
-    # persist the published 12-name view DDL next to the gold tables
-    # (VERDICT r8 item 5: the reference's declared CS/ETF-segmented surface,
-    # served as documented views — one broadcast-semi-join filter each)
-    from tickerlake_spark.sql import write_reference_gold_view_ddl
-
-    write_reference_gold_view_ddl(catalog)
-    # retention for the snapshot-committed gold fact tables: keep a short
-    # time-travel window (current + two prior versions for the audit
-    # stamp / repeatable reads during maintenance) and reclaim the rest —
-    # without this a daily incremental lake accretes one version per run
-    # forever. Single-writer pipeline: the default (non-orphan) vacuum is
-    # safe here by construction.
-    from tickerlake_spark.storage.snapshots import snap_vacuum
-
-    for t in _SNAP_GOLD_TABLES:
-        snap_vacuum(catalog.gold(t), keep_last=3, fs=catalog.fs)
-    timer.mark("vacuum")
+        _publish_gold(catalog)
+        timer.mark("vacuum")
     summary = {
         "mode": "incremental" if incremental else "full",
         "timings": timer.timings,
@@ -1301,6 +989,262 @@ def run_gold(
         summary["vwap_rows"] = read_table(spark, catalog.gold("vwap_signals"), fs=catalog.fs).count()
         summary["hvc_rows"] = read_table(spark, catalog.gold("hvc_daily"), fs=catalog.fs).count()
     return summary
+
+
+def apply_gold_delta(
+    spark: SparkSession,
+    catalog: Catalog,
+    since: dt.date,
+    tickers: DataFrame,
+    *,
+    hvc_threshold: float,
+    min_steps: int,
+    calculated_at: dt.datetime | None,
+    timer: _StageTimer | None = None,
+) -> None:
+    """Maintain every gold table for one batch of changed silver rows: THE
+    incremental gold path, shared by ``run_gold``'s incremental arm and the
+    streaming ``gold_maintenance_batch``.
+
+    ``since`` is the earliest date whose silver rows changed and
+    ``tickers`` a one-column frame of the tickers whose rows changed. Each
+    write re-derives a deterministic slice of silver, in this order:
+
+    1. closes extract: appended when ``since`` lies past the extract's own
+       footer-stats max date (no appended key can exist yet), otherwise
+       the batch's (tb, ticker, date) keys are replaced;
+    2. hvc_daily: events dated from ``since`` on are recomputed and
+       range-replaced — a replayed or corrected bar can make an event
+       disappear, which a keyed merge cannot express;
+    3. hvc_weekly/monthly: range-replaced from the bucket holding the day
+       before ``since`` (the resampled silver rows changed from there);
+    4. stair-steps and best patterns, for the AFFECTED tickers only: batch
+       tickers holding an hvc_daily event dated from ``since`` on, before
+       or after step 2. Patterns depend only on event dates and the closes
+       on them, so no other ticker's patterns can change; an empty set
+       skips the step;
+    5. vwap_signals, the COMMIT POINT: the YTD/QTD sums restart every Jan
+       1, so the batch tickers' signals are recomputed over the
+       calendar-year slice from Jan 1 of ``since``'s year and the rows
+       dated from ``since`` on are merged. Its watermark defines
+       ``run_gold``'s next delta, so it lands after every other write: a
+       crash before it leaves the watermark in place, the retry
+       re-derives the same batch, and the extract's gate (which reads the
+       lake) routes the retry through the replace arm;
+    6. the view DDL and the snapshot gold tables' retention vacuum.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tickerlake_spark.operators.closes import (
+        append_closes_extract,
+        read_closes_for,
+        with_ticker_bucket,
+    )
+    from tickerlake_spark.operators.vwap import vwap_signals
+    from tickerlake_spark.storage import parquet_stats_max
+    from tickerlake_spark.storage.maintenance import repair_partition_swaps
+    from tickerlake_spark.storage.snapshots import snap_replace_where, snap_upsert
+
+    timer = timer or _StageTimer()
+    daily = read_table(spark, catalog.silver("daily_aggregates"), fs=catalog.fs)
+    delta = daily.filter(F.col("date") >= F.lit(since))  # partition-pruned
+    hvc_path = catalog.gold("hvc_daily")
+    closes_path = catalog.gold("closes_by_ticker")
+    # persisted: feeds the range replace AND the affected-ticker collect
+    events = hvc_events(
+        read_table(spark, catalog.silver("daily_indicators"), fs=catalog.fs).filter(
+            F.col("date") >= F.lit(since)
+        ),
+        delta,
+        threshold=hvc_threshold,
+    ).persist()
+    try:
+        changed = events.select("ticker")
+        if table_exists(hvc_path, fs=catalog.fs):
+            # the CURRENT version's events, read before the replace: an
+            # event the batch removes still names its ticker
+            changed = changed.unionByName(
+                read_table(spark, hvc_path, fs=catalog.fs)
+                .filter(F.col("date") >= F.lit(since))
+                .select("ticker")
+            )
+        aff_list = sorted(
+            r[0]
+            for r in changed.join(tickers, "ticker", "left_semi")
+            .distinct()
+            .collect()
+        )
+
+        def _extract_task() -> None:
+            # finish any swap a crashed compaction left mid-flight FIRST:
+            # the max-date probe must see every bucket's real history, not
+            # one parked in a Spark-invisible '_old_*' dir
+            repair_partition_swaps(closes_path, fs=catalog.fs)
+            ext_delta = delta.join(tickers, "ticker", "left_semi").select(
+                "ticker", "date", "close"
+            )
+            ext_max = parquet_stats_max(closes_path, "date", fs=catalog.fs)
+            if ext_max is not None and since > ext_max:
+                # every appended row is dated >= since, past the extract's
+                # real max date: no appended key can already exist
+                append_closes_extract(spark, ext_delta, closes_path, fs=catalog.fs)
+            else:
+                # a retry, a replay, a late bar or a missing extract:
+                # replace exactly the batch's keys (tb leads, so only their
+                # buckets rewrite)
+                keyed = with_ticker_bucket(ext_delta)
+                replace_keys(
+                    spark,
+                    closes_path,
+                    keyed.select("tb", "ticker", "date"),
+                    keyed,
+                    keys=["tb", "ticker", "date"],
+                    partition_by="tb",
+                    with_count=False,
+                    fs=catalog.fs,
+                )
+
+        def _hvc_daily_task() -> None:
+            snap_replace_where(
+                spark,
+                hvc_path,
+                schemas.conform(events, schemas.HVC_EVENTS),
+                "date",
+                lo=since,
+                fs=catalog.fs,
+            )
+
+        def _hvc_face_task(period: str, ind_table: str, agg_table: str,
+                           out: str) -> None:
+            # a bucket's ratio can drop BELOW the threshold as the open
+            # bucket fills: REPLACE the range, never merge. As a snapshot
+            # commit the range replace is atomic — files whose committed
+            # date range is provably older carry by reference, one manifest
+            # CAS publishes the rest
+            bs = _bucket_start(period, since - dt.timedelta(days=1))
+            ev = hvc_events(
+                read_table(spark, catalog.silver(ind_table), fs=catalog.fs).filter(
+                    F.col("date") >= F.lit(bs)
+                ),
+                read_table(spark, catalog.silver(agg_table), fs=catalog.fs).filter(
+                    F.col("date") >= F.lit(bs)
+                ),
+                threshold=hvc_threshold,
+            )
+            snap_replace_where(
+                spark,
+                catalog.gold(out),
+                schemas.conform(ev, schemas.HVC_EVENTS),
+                "date",
+                lo=bs,
+                fs=catalog.fs,
+            )
+
+        # the four writes touch four DIFFERENT tables and are each
+        # retry-idempotent, so their relative order is immaterial — run
+        # them concurrently; their per-job fixed overheads dominate at small
+        # delta sizes and overlap on idle cores. The merge primitives use
+        # writer-level overwrite options, so no session state is shared.
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futs = [
+                pool.submit(_extract_task),
+                pool.submit(_hvc_daily_task),
+                pool.submit(
+                    _hvc_face_task, "week", "weekly_indicators",
+                    "weekly_aggregates", "hvc_weekly",
+                ),
+                pool.submit(
+                    _hvc_face_task, "month", "monthly_indicators",
+                    "monthly_aggregates", "hvc_monthly",
+                ),
+            ]
+            for f in futs:
+                f.result()
+    finally:
+        events.unpersist()
+    timer.mark("extract+hvc_parallel")
+
+    if aff_list:
+        affected = spark.createDataFrame([(t,) for t in aff_list], "ticker string")
+        aff_events = read_table(spark, hvc_path, fs=catalog.fs).join(
+            F.broadcast(affected), "ticker", "left_semi"
+        )
+        if len(aff_list) <= 2_000:
+            # hash-bucket partition pruning + parquet In/bloom row-group
+            # skipping: reads only the affected tickers' history
+            aff_closes = read_closes_for(spark, closes_path, aff_list, fs=catalog.fs)
+        else:
+            # degenerate batch (e.g. backfill): the extract filter list
+            # would bloat the plan; a semi-join scan is the right plan
+            aff_closes = daily.select("ticker", "date", "close").join(
+                F.broadcast(affected), "ticker", "left_semi"
+            )
+        # both directions window the same event sequence — materialize the
+        # events x closes join ONCE (the extract read and the events
+        # semi-join are the expensive legs; the per-direction windows are
+        # trivial)
+        aff_seq = stairstep_seq(aff_events.select("ticker", "date"), aff_closes).persist()
+        try:
+            # replace_keys, not a merge: an island that shrank below
+            # min_steps must DELETE its ticker's rows. The two directions
+            # write different flat tables over the same persisted input;
+            # their fixed-overhead-dominated jobs overlap on idle cores
+            def _one_direction(direction: str, table: str) -> None:
+                pats = stairstep_patterns(
+                    aff_events, aff_closes,
+                    min_steps=min_steps, direction=direction, seq=aff_seq,
+                )
+                replace_keys(
+                    spark,
+                    catalog.gold(table),
+                    affected,
+                    schemas.conform(pats, schemas.STAIRSTEP_PATTERNS),
+                    keys=["ticker"],
+                    with_count=False,
+                    fs=catalog.fs,
+                )
+
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                futs = [
+                    pool.submit(_one_direction, d, t)
+                    for d, t in (("up", "stairstep_up"), ("down", "stairstep_down"))
+                ]
+                for f in futs:
+                    f.result()
+        finally:
+            aff_seq.unpersist()
+    timer.mark("stairsteps")
+    if aff_list:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [
+                pool.submit(_write_best_patterns, spark, catalog, s, o)
+                for s, o in _BEST_PATTERN_TABLES
+            ]
+            for f in futs:
+                f.result()
+        timer.mark("best_patterns")
+
+    year_start = dt.date(since.year, 1, 1)
+    signals = vwap_signals(
+        daily.filter(F.col("date") >= F.lit(year_start)).join(
+            tickers, "ticker", "left_semi"
+        ),
+        calculated_at=calculated_at,
+    ).filter(F.col("date") >= F.lit(since))
+    # date leads the key: the file-level prune rewrites only the recent
+    # date-range files of the date-clustered layout (none on a forward day)
+    snap_upsert(
+        spark,
+        catalog.gold("vwap_signals"),
+        schemas.conform(signals, schemas.VWAP_SIGNALS),
+        keys=["date", "ticker"],
+        stats_cols=("date",),
+        validate_unique=False,  # (date, ticker) unique per construction
+        fs=catalog.fs,
+    )
+    timer.mark("vwap_signals")
+    _publish_gold(catalog)
+    timer.mark("vacuum")
 
 
 def run_validate(

@@ -289,10 +289,10 @@ def parquet_stats_max(path: str, column: str, fs: FS = LOCAL_FS):
     """Max of ``column`` across a Parquet table from row-group STATISTICS
     alone — footer reads, zero data pages, no Spark job.
 
-    The metadata-cheap watermark probe for small flat tables polled at the
-    top of every incremental run (e.g. the ``vwap_state`` checkpoint's
-    ``last_date``): a Spark aggregate there costs a full job-submission
-    round trip to answer a question the footers already hold. Returns None
+    The metadata-cheap watermark probe polled by every incremental run
+    (e.g. the ``closes_by_ticker`` extract's max ``date``, which gates its
+    append): a Spark aggregate there costs a full job-submission round
+    trip to answer a question the footers already hold. Returns None
     when any row group lacks usable min/max stats (caller falls back to the
     aggregate) or the table is missing/empty.
 

@@ -1,14 +1,17 @@
-"""Streaming face of the medallion pipeline: bronze files -> silver tables.
+"""Streaming face of the medallion pipeline: bronze files -> silver (and
+gold) tables.
 
 The reference ingests on a daily cron (reference: .github/workflows/main.yml:6-8
-— batch only). This module runs the SAME silver maintenance continuously:
-a Structured Streaming file source watches the bronze ``stocks`` layout, and
+— batch only). This module runs the SAME maintenance continuously: a
+Structured Streaming file source watches the bronze ``stocks`` layout, and
 every micro-batch of newly-landed bar files is split-adjusted and handed to
 ``pipeline.apply_silver_delta`` via ``foreachBatch`` — the one incremental
 silver path the batch append runs too: indicator rows from the batch's
 earliest date onward (last-200-rows context from the indicator-tail state or
 one horizon-pruned build), resample buckets from the bucket before that
-date onward.
+date onward. With gold enabled the batch then goes to
+``pipeline.apply_gold_delta``, the one incremental gold path ``run_gold``
+runs too.
 
 Delivery semantics: forward batches append; replays upsert. A batch is
 forward only when every bar lies past the stored watermark, so its keys are
@@ -30,8 +33,8 @@ from pyspark.sql import functions as F
 
 from tickerlake_spark import schemas
 from tickerlake_spark.operators.splits import apply_splits
-from tickerlake_spark.pipeline import apply_silver_delta
-from tickerlake_spark.storage import Catalog, read_table, table_exists, upsert_table
+from tickerlake_spark.pipeline import apply_gold_delta, apply_silver_delta
+from tickerlake_spark.storage import Catalog, read_table, table_exists
 
 __all__ = [
     "silver_maintenance_batch",
@@ -138,228 +141,25 @@ def gold_maintenance_batch(
     """Advance every gold table for one micro-batch (VERDICT r3 item 6).
 
     Runs AFTER ``silver_maintenance_batch`` in the same sink, so silver
-    already reflects the batch. Per-table bounded recompute, mirroring
-    ``pipeline.run_gold``'s incremental arm but scoped to the batch:
-
-    - vwap_signals: YTD/QTD cumulative sums reset at year boundaries and
-      only rows of tickers IN the batch can change — recompute the batch
-      tickers' signals over the calendar-year slice from ``since``'s Jan 1
-      and upsert rows with date >= since (earlier rows of the year are
-      provably unchanged: cumulative sums only look backward).
-    - hvc_daily: silver recomputed indicator rows from ``since`` onward, so
-      events on those dates are re-derived and date-replaced (an event can
-      DISAPPEAR when a replayed/late row drops the ratio below threshold —
-      replace, never append).
-    - hvc_weekly/monthly: same, from the open bucket's start.
-    - stairsteps: a changed event can extend/merge/split a ticker's
-      islands; every batch ticker's full pattern set is recomputed and
-      group-replaced (a merged island below min_steps must delete rows).
-    - best_patterns: recomputed from the (tiny) pattern tables.
-
-    Idempotent: every write is a keyed upsert/replacement of a
-    deterministically-recomputed slice (the closes extract appends only
-    when its own footer-stats watermark proves the batch forward — see the
-    inline comment), so a replayed micro-batch converges to byte-identical
-    tables. Per-batch cost is O(batch tickers x bounded context), never
-    O(history).
+    already reflects the batch. The batch's earliest date and its tickers
+    go to ``pipeline.apply_gold_delta`` — the one incremental gold path the
+    batch ``run_gold`` runs too. Every write there re-derives a
+    deterministic slice of silver, so a replayed micro-batch converges to
+    the same tables; per-batch cost is O(batch tickers x bounded context),
+    never O(history).
     """
-    import datetime as _dt
-
-    from tickerlake_spark.operators.closes import (
-        read_closes_for,
-        with_ticker_bucket,
-        write_closes_extract,
-    )
-    from tickerlake_spark.operators.hvc import (
-        best_patterns,
-        hvc_events,
-        stairstep_patterns,
-    )
-    from tickerlake_spark.operators.vwap import vwap_signals, vwap_state
-    from tickerlake_spark.pipeline import _bucket_start
-    from tickerlake_spark.storage import replace_keys, write_table
-    from tickerlake_spark.storage.snapshots import snap_replace_where, snap_upsert
-
     if batch.isEmpty():
         return
     since = batch.agg(F.min("date")).first()[0]
-    tickers = batch.select("ticker").distinct()
-    daily = read_table(spark, catalog.silver("daily_aggregates"), fs=catalog.fs)
-
-    year_start = _dt.date(since.year, 1, 1)
-    aff_daily = daily.join(tickers, "ticker", "left_semi")
-    sig = vwap_signals(
-        aff_daily.filter(F.col("date") >= F.lit(year_start)),
-        calculated_at=calculated_at,
-    ).filter(F.col("date") >= F.lit(since))
-    # replay-idempotent: the slice is a deterministic recompute, and the
-    # keyed merge converges a replayed batch to the identical visible table.
-    # Date leads the key so the file-level prune rewrites only the recent
-    # date-range files of the date-clustered layout.
-    snap_upsert(
+    apply_gold_delta(
         spark,
-        catalog.gold("vwap_signals"),
-        schemas.conform(sig, schemas.VWAP_SIGNALS),
-        keys=["date", "ticker"],
-        stats_cols=("date",),
-        validate_unique=False,
-        fs=catalog.fs,
+        catalog,
+        since,
+        batch.select("ticker").distinct(),
+        hvc_threshold=hvc_threshold,
+        min_steps=min_steps,
+        calculated_at=calculated_at,
     )
-    # keep the batch pipeline's O(delta) companions in lockstep, so a lake
-    # alternating streaming and batch maintenance never forces run_gold back
-    # to a migrating full rebuild:
-    # - vwap_state rows for the batch tickers' touched years, recomputed
-    #   from the same year slice the signals came from (keyed upsert ->
-    #   replay-idempotent);
-    # - the ticker-hash closes extract, upserted on (tb, ticker, date) —
-    #   the partition column leads the key, so the merge rewrites only the
-    #   batch tickers' hash buckets, and a replayed batch converges.
-    state_path = catalog.gold("vwap_state")
-    if table_exists(state_path, fs=catalog.fs):
-        upsert_table(
-            spark,
-            state_path,
-            vwap_state(aff_daily.filter(F.col("date") >= F.lit(year_start))),
-            keys=["ticker", "year", "quarter"],
-            validate_unique=False,
-            fs=catalog.fs,
-        )
-    else:
-        write_table(vwap_state(daily), state_path, fs=catalog.fs)
-    closes_path = catalog.gold("closes_by_ticker")
-    # the extract mirrors SILVER (split-adjusted) closes, so the delta
-    # comes from the just-maintained silver rows, not the raw batch
-    ext_delta = aff_daily.filter(F.col("date") >= F.lit(since)).select(
-        "ticker", "date", "close"
-    )
-    if not table_exists(closes_path, fs=catalog.fs):
-        write_closes_extract(daily, closes_path, fs=catalog.fs)
-    else:
-        # O(delta) maintenance (ADVICE r7 low): a keyed upsert on the
-        # tb-partitioned extract rewrites every touched hash bucket's
-        # ENTIRE history — a broad micro-batch (one trading day across the
-        # universe) hashes into all 64 buckets, making every batch O(table).
-        # Instead: APPEND the batch's extract rows (cost = delta + the
-        # bounded compaction) whenever that is provably duplicate-free.
-        #
-        # The forward gate (ADVICE r8 medium) compares ``since`` against
-        # the extract's REAL max date (footer statistics — exact for a
-        # date column, no Spark job), not a stream-private marker: every
-        # appended row has date >= since, so ``since > ext_max`` means no
-        # appended key can already exist. Gating on lake state makes every
-        # replay/alternation scenario self-correcting with nothing to
-        # rebase: a replayed micro-batch (crashed append, crashed
-        # checkpoint commit, or an in-sink splits full rebuild) and a
-        # stream resuming on a lake the BATCH pipeline advanced both leave
-        # ext_max >= since, which routes the retry through the idempotent
-        # scope-replace of the batch's exact (tb, ticker, date) keys.
-        from tickerlake_spark.operators.closes import append_closes_extract
-        from tickerlake_spark.storage import parquet_stats_max, replace_keys
-        from tickerlake_spark.storage.maintenance import repair_partition_swaps
-
-        # finish any swap a crashed compaction left mid-flight FIRST: the
-        # watermark probe and the replace path must see every bucket's
-        # real history, not a table with one bucket parked in a
-        # Spark-invisible '_old_*' dir (r9 review finding)
-        repair_partition_swaps(closes_path, fs=catalog.fs)
-        ext_max = parquet_stats_max(closes_path, "date", fs=catalog.fs)
-        if ext_max is not None and since > ext_max:
-            append_closes_extract(spark, ext_delta, closes_path, fs=catalog.fs)
-        else:
-            keyed = with_ticker_bucket(ext_delta)
-            replace_keys(
-                spark,
-                closes_path,
-                keyed.select("tb", "ticker", "date"),
-                keyed,
-                keys=["tb", "ticker", "date"],
-                partition_by="tb",
-                with_count=False,
-                fs=catalog.fs,
-            )
-
-    ind_slice = read_table(spark, catalog.silver("daily_indicators"), fs=catalog.fs).filter(
-        F.col("date") >= F.lit(since)
-    )
-    ev = hvc_events(
-        ind_slice, daily.filter(F.col("date") >= F.lit(since)), threshold=hvc_threshold
-    )
-    # events can DISAPPEAR (a replayed/late row drops the ratio below
-    # threshold, an open bucket fills): a range replace, never a merge
-    snap_replace_where(
-        spark, catalog.gold("hvc_daily"),
-        schemas.conform(ev, schemas.HVC_EVENTS), "date", lo=since, fs=catalog.fs,
-    )
-
-    for period, ind_table, agg_table, out in (
-        ("week", "weekly_indicators", "weekly_aggregates", "hvc_weekly"),
-        ("month", "monthly_indicators", "monthly_aggregates", "hvc_monthly"),
-    ):
-        bs = _bucket_start(period, since)
-        p_ind = read_table(spark, catalog.silver(ind_table), fs=catalog.fs).filter(
-            F.col("date") >= F.lit(bs)
-        )
-        p_agg = read_table(spark, catalog.silver(agg_table), fs=catalog.fs).filter(
-            F.col("date") >= F.lit(bs)
-        )
-        p_ev = hvc_events(p_ind, p_agg, threshold=hvc_threshold)
-        snap_replace_where(
-            spark, catalog.gold(out),
-            schemas.conform(p_ev, schemas.HVC_EVENTS), "date", lo=bs, fs=catalog.fs,
-        )
-
-    all_events = read_table(spark, catalog.gold("hvc_daily"), fs=catalog.fs)
-    aff_events = all_events.join(tickers, "ticker", "left_semi")
-    aff_list = sorted(r[0] for r in tickers.collect())
-    if len(aff_list) <= 2_000:
-        # extract read: bucket partition pruning + parquet In/bloom skipping
-        aff_closes = read_closes_for(spark, closes_path, aff_list, fs=catalog.fs)
-    else:
-        aff_closes = daily.select("ticker", "date", "close").join(
-            tickers, "ticker", "left_semi"
-        )
-    from tickerlake_spark.operators.hvc import stairstep_seq
-
-    # one events x closes join shared by both directions (same sharing as
-    # pipeline.run_gold)
-    aff_seq = stairstep_seq(aff_events.select("ticker", "date"), aff_closes).persist()
-    try:
-        for direction, table in (("up", "stairstep_up"), ("down", "stairstep_down")):
-            pats = stairstep_patterns(
-                aff_events.select("ticker", "date"),
-                aff_closes,
-                min_steps=min_steps,
-                direction=direction,
-                seq=aff_seq,
-            )
-            replace_keys(
-                spark,
-                catalog.gold(table),
-                tickers,
-                schemas.conform(pats, schemas.STAIRSTEP_PATTERNS),
-                keys=["ticker"],
-                fs=catalog.fs,
-            )
-    finally:
-        aff_seq.unpersist()
-    for src, out in (
-        ("stairstep_up", "best_patterns"),
-        ("stairstep_down", "best_patterns_down"),
-    ):
-        best = best_patterns(read_table(spark, catalog.gold(src), fs=catalog.fs))
-        write_table(
-            schemas.conform(best, schemas.STAIRSTEP_PATTERNS),
-            catalog.gold(out),
-            fs=catalog.fs,
-        )
-    # a pure-streaming lake carries the published 12-name view DDL too.
-    # Unconditional call: the writer itself is content-keyed (a relocated
-    # catalog refreshes the embedded paths; unchanged content is a free
-    # string compare, r9 review nit — the old existence key left stale DDL
-    # after a relocation)
-    from tickerlake_spark.sql import write_reference_gold_view_ddl
-
-    write_reference_gold_view_ddl(catalog)
 
 
 def stream_bronze_to_silver(

@@ -39,7 +39,7 @@ def setup():
 
 
 def variants():
-    from tickerlake_spark.operators.vwap import vwap_full
+    from tickerlake_spark.operators.vwap import vwap_signals
     from tickerlake_spark.session import get_spark
     from tickerlake_spark.storage import Catalog, read_table, write_table
 
@@ -54,8 +54,8 @@ def variants():
     stamp = dt.datetime(2026, 1, 1)
 
     def mk():
-        signals, state, shared = vwap_full(narrow, calculated_at=stamp)
-        return schemas.conform(signals, schemas.VWAP_SIGNALS), state, shared
+        signals = vwap_signals(narrow, calculated_at=stamp)
+        return schemas.conform(signals, schemas.VWAP_SIGNALS), None, signals
 
     results = {}
 
