@@ -43,11 +43,22 @@ def test_closes_extract_reads_only_affected_buckets(spark, tmp_path):
     path = str(tmp_path / "closes")
     write_closes_extract(daily, path)
     affected = ["T003", "T017"]
-    got = read_closes_for(spark, path, affected)
-    assert got.count() == 10
-    assert {r.ticker for r in got.select("ticker").distinct().collect()} == set(
-        affected
+    sc = spark.sparkContext
+    group = "read-closes-for"
+    sc.setJobGroup(group, "jobs launched while building the extract read")
+    try:
+        got = read_closes_for(spark, path, affected)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    want = (
+        spark.read.parquet(path)
+        .filter(F.col("ticker").isin(affected))
+        .select("ticker", "date", "close")
     )
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 10
     # the bucket filter must land in the scan's PartitionFilters (directory
     # pruning) and the ticker filter must be pushed to parquet (row-group
     # stats + bloom skipping)
@@ -64,6 +75,35 @@ def test_closes_extract_reads_only_affected_buckets(spark, tmp_path):
     assert "PushedFilters: [" in plan
     pushed = plan.split("PushedFilters: [")[1].split("]")[0]
     assert "ticker" in pushed, pushed
+
+
+def test_closes_extract_bloom_filter_only_on_rebuild(spark, tmp_path):
+    """The rebuild writes a ticker bloom filter sized for the universe
+    (16,384 values, tens of KB a file); an appended day's files carry
+    none, so each stays a few KB."""
+    from tickerlake_spark.operators.closes import (
+        append_closes_extract,
+        write_closes_extract,
+    )
+
+    path = str(tmp_path / "closes")
+
+    def files():
+        return {
+            os.path.join(r, f): os.path.getsize(os.path.join(r, f))
+            for r, _, fs in os.walk(path)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    write_closes_extract(_bars(spark, [("A", D(2024, 1, 2), 10.0, 100)]), path)
+    built = files()
+    assert built and min(built.values()) > 16_384, built
+    append_closes_extract(
+        spark, _bars(spark, [("A", D(2024, 1, 3), 11.0, 100)]), path
+    )
+    appended = {f: n for f, n in files().items() if f not in built}
+    assert appended and max(appended.values()) < 8_192, appended
 
 
 def test_closes_extract_append_then_compact(spark, tmp_path):

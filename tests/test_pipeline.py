@@ -825,12 +825,22 @@ def test_gold_incremental_crash_retry_converges(spark, tmp_path):
         assert collect(cat_a, table) == collect(cat_b, table), table
 
 
-def test_two_sequential_appends_use_tails_and_match_full(spark, tmp_path):
+def test_two_sequential_appends_use_tails_and_match_full(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r7 item 5: the first append after a full rewrite installs the
     indicator-tail state (fallback horizon path), the SECOND append must
     take the O(state) tail path — and every silver table must still equal a
-    from-scratch rebuild byte-for-byte."""
+    from-scratch rebuild byte-for-byte. Both appends are forward, so they
+    commit through appends and range replaces: no keyed MERGE at all."""
     from pyspark.sql import functions as F
+
+    import tickerlake_spark.pipeline as pipeline
+
+    def no_upsert(*args, **kwargs):
+        raise AssertionError("a forward append ran upsert_table")
+
+    monkeypatch.setattr(pipeline, "upsert_table", no_upsert)
 
     days = trading_days(D(2024, 1, 2), D(2024, 2, 20))
     bars = {
@@ -905,6 +915,78 @@ def test_two_sequential_appends_use_tails_and_match_full(spark, tmp_path):
         assert got == want, grain
 
 
+_CRASH_DAYS = trading_days(D(2024, 1, 2), D(2024, 2, 20))
+_CRASH_BARS = {
+    d: _bars_for(d, price=100.0 + 3 * (i % 7) - 0.5 * (i % 3))
+    for i, d in enumerate(_CRASH_DAYS)
+}
+_SILVER_TABLES = (
+    "daily_aggregates",
+    "weekly_aggregates",
+    "monthly_aggregates",
+    "daily_indicators",
+    "weekly_indicators",
+    "monthly_indicators",
+)
+
+
+def _crash_source(dates):
+    s = _source(dates)
+    s._bars = {d: _CRASH_BARS[d] for d in dates}
+    return s
+
+
+def _sorted_rows(df):
+    return sorted(
+        map(tuple, df.select(*sorted(df.columns)).collect()),
+        key=lambda row: tuple(
+            (v is not None, v if v is not None else 0) for v in row
+        ),
+    )
+
+
+def _silver_rows(spark, cat, table):
+    return _sorted_rows(read_table(spark, cat.path("silver", table)))
+
+
+def _assert_silver_matches_full_rewrite(spark, cat_a, tmp_path):
+    """Every silver table of ``cat_a`` and its three indicator tails equal
+    a full rewrite over all of ``_CRASH_DAYS``."""
+    from tickerlake_spark.operators.indicator_state import build_tail
+
+    cat_b = Catalog(root=str(tmp_path / "b"))
+    cp_b = Checkpoints(str(tmp_path / "cp_b.json"))
+    run_bronze(
+        spark, _crash_source(_CRASH_DAYS), cat_b, cp_b, _CRASH_DAYS[0],
+        _CRASH_DAYS[-1],
+    )
+    assert run_silver(spark, cat_b, cp_b)["mode"] == "full"
+    for table in _SILVER_TABLES:
+        assert _silver_rows(spark, cat_a, table) == _silver_rows(
+            spark, cat_b, table
+        ), table
+    for grain, agg in (
+        ("daily", "daily_aggregates"),
+        ("week", "weekly_aggregates"),
+        ("month", "monthly_aggregates"),
+    ):
+        want = _sorted_rows(build_tail(read_table(spark, cat_b.silver(agg))))
+        assert _silver_rows(spark, cat_a, f"indicator_tail_{grain}") == want, grain
+
+
+def _lake_one_append_behind(spark, tmp_path):
+    """A lake fully built to the third-last crash day and appended once,
+    with bronze landed for every crash day."""
+    days = _CRASH_DAYS
+    cat = Catalog(root=str(tmp_path / "a"))
+    cp = Checkpoints(str(tmp_path / "cp_a.json"))
+    run_bronze(spark, _crash_source(days[:-2]), cat, cp, days[0], days[-3])
+    assert run_silver(spark, cat, cp)["mode"] == "full"
+    run_bronze(spark, _crash_source(days[:-1]), cat, cp, days[0], days[-2])
+    assert run_silver(spark, cat, cp)["mode"] == "append"
+    return cat, cp
+
+
 def test_append_recovers_half_written_day(spark, tmp_path):
     """A crash after the append's daily_aggregates commit but before its
     daily_indicators commit leaves the aggregates one day ahead, with the
@@ -914,70 +996,59 @@ def test_append_recovers_half_written_day(spark, tmp_path):
     full rewrite over the same bronze."""
     import shutil
 
-    days = trading_days(D(2024, 1, 2), D(2024, 2, 20))
-    bars = {
-        d: _bars_for(d, price=100.0 + 3 * (i % 7) - 0.5 * (i % 3))
-        for i, d in enumerate(days)
-    }
-
-    def src(dates):
-        s = _source(dates)
-        s._bars = {d: bars[d] for d in dates}
-        return s
-
-    def collect(cat, table):
-        df = read_table(spark, cat.path("silver", table))
-        return sorted(
-            map(tuple, df.select(*sorted(df.columns)).collect()),
-            key=lambda row: tuple(
-                (v is not None, v if v is not None else 0) for v in row
-            ),
-        )
-
-    cat_a = Catalog(root=str(tmp_path / "a"))
-    cp_a = Checkpoints(str(tmp_path / "cp_a.json"))
-    run_bronze(spark, src(days[:-2]), cat_a, cp_a, days[0], days[-3])
-    assert run_silver(spark, cat_a, cp_a)["mode"] == "full"
-    run_bronze(spark, src(days[:-1]), cat_a, cp_a, days[0], days[-2])
-    assert run_silver(spark, cat_a, cp_a)["mode"] == "append"
+    days = _CRASH_DAYS
+    cat_a, cp_a = _lake_one_append_behind(spark, tmp_path)
 
     # the crash state of day D = days[-2]: its aggregates landed, its
     # indicator rows and the tail swaps did not
     shutil.rmtree(f"{cat_a.silver('daily_indicators')}/date={days[-2].isoformat()}")
     cp_a.set("silver_tail_as_of", days[-3].isoformat())
 
-    run_bronze(spark, src(days), cat_a, cp_a, days[0], days[-1])
+    run_bronze(spark, _crash_source(days), cat_a, cp_a, days[0], days[-1])
     assert run_silver(spark, cat_a, cp_a)["mode"] == "append"
     assert cp_a.get("silver_tail_as_of") == days[-1].isoformat()
+    _assert_silver_matches_full_rewrite(spark, cat_a, tmp_path)
 
-    cat_b = Catalog(root=str(tmp_path / "b"))
-    cp_b = Checkpoints(str(tmp_path / "cp_b.json"))
-    run_bronze(spark, src(days), cat_b, cp_b, days[0], days[-1])
-    assert run_silver(spark, cat_b, cp_b)["mode"] == "full"
-    for table in (
-        "daily_aggregates",
-        "weekly_aggregates",
-        "monthly_aggregates",
-        "daily_indicators",
-        "weekly_indicators",
-        "monthly_indicators",
-    ):
-        assert collect(cat_a, table) == collect(cat_b, table), table
-    from tickerlake_spark.operators.indicator_state import build_tail
 
-    for grain, agg in (
-        ("daily", "daily_aggregates"),
-        ("week", "weekly_aggregates"),
-        ("month", "monthly_aggregates"),
-    ):
-        want_df = build_tail(read_table(spark, cat_b.silver(agg)))
-        want = sorted(
-            map(tuple, want_df.select(*sorted(want_df.columns)).collect()),
-            key=lambda row: tuple(
-                (v is not None, v if v is not None else 0) for v in row
-            ),
-        )
-        assert collect(cat_a, f"indicator_tail_{grain}") == want, grain
+def test_append_recovers_crash_before_daily_indicators(
+    spark, tmp_path, monkeypatch
+):
+    """The daily-indicator chain runs beside the weekly/monthly chains, so
+    a crash can land the weekly/monthly range replace while the
+    daily_indicators write fails. The retry resumes from the lagging
+    watermark, upserts the daily tables and range-replaces the buckets
+    again: every silver table and the three tails must then equal a full
+    rewrite over the same bronze."""
+    import tickerlake_spark.pipeline as pipeline
+    from tickerlake_spark.storage import get_max_date
+
+    days = _CRASH_DAYS
+    cat_a, cp_a = _lake_one_append_behind(spark, tmp_path)
+    run_bronze(spark, _crash_source(days), cat_a, cp_a, days[0], days[-1])
+    weekly_before = _silver_rows(spark, cat_a, "weekly_aggregates")
+
+    real_write = pipeline.write_table
+
+    def failing_write(df, path, *args, **kwargs):
+        if path == cat_a.silver("daily_indicators"):
+            raise RuntimeError("injected crash before the daily_indicators write")
+        return real_write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_table", failing_write)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_silver(spark, cat_a, cp_a)
+    monkeypatch.undo()
+    # the crash state: the weekly range already holds the last day, while
+    # daily_indicators and silver_tail_as_of lag one day behind
+    assert _silver_rows(spark, cat_a, "weekly_aggregates") != weekly_before
+    last, behind = days[-1].isoformat(), days[-2].isoformat()
+    assert get_max_date(spark, cat_a.silver("daily_aggregates")) == last
+    assert get_max_date(spark, cat_a.silver("daily_indicators")) == behind
+    assert cp_a.get("silver_tail_as_of") == behind
+
+    assert run_silver(spark, cat_a, cp_a)["mode"] == "append"
+    assert cp_a.get("silver_tail_as_of") == last
+    _assert_silver_matches_full_rewrite(spark, cat_a, tmp_path)
 
 
 def test_mixed_universe_semantics(spark, tmp_path):

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from tickerlake_spark import schemas
 from tickerlake_spark.schemas import conform
 from tickerlake_spark.storage import (
@@ -78,6 +80,46 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
     )
     rows = {(r.t, r.date) for r in read_table(spark, path).collect()}
     assert rows == {("A", d1), ("C", d2)}
+
+
+def test_dynamic_overwrite_replaces_flat_zero_row_table(spark, tmp_path):
+    """A partitioned overwrite of an empty frame leaves write_table's flat
+    zero-row layout; a later dynamic overwrite must replace that root file,
+    not write partition dirs beside it (an unreadable mixed layout)."""
+    import os
+
+    path = str(tmp_path / "flat")
+    schema = "t string, date date"
+    write_table(spark.createDataFrame([], schema), path, partition_by="date")
+    assert any(f.endswith(".parquet") for f in os.listdir(path))
+    d1 = dt.date(2024, 1, 1)
+    write_table(
+        spark.createDataFrame([("A", d1)], schema),
+        path,
+        partition_by="date",
+        dynamic=True,
+    )
+    assert not any(f.endswith(".parquet") for f in os.listdir(path))
+    rows = {(r.t, r.date) for r in read_table(spark, path).collect()}
+    assert rows == {("A", d1)}
+
+
+def test_dynamic_overwrite_refuses_flat_table_with_rows(spark, tmp_path):
+    import os
+
+    path = str(tmp_path / "flat_rows")
+    d1 = dt.date(2024, 1, 1)
+    write_table(spark.createDataFrame([("A", d1)], "t string, date date"), path)
+    before = sorted(os.listdir(path))
+    with pytest.raises(ValueError, match="flat layout"):
+        write_table(
+            spark.createDataFrame([("B", d1)], "t string, date date"),
+            path,
+            partition_by="date",
+            dynamic=True,
+        )
+    assert sorted(os.listdir(path)) == before
+    assert [(r.t, r.date) for r in read_table(spark, path).collect()] == [("A", d1)]
 
 
 def test_init_table_empty_with_schema(spark, tmp_path):

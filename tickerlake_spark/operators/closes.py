@@ -14,7 +14,8 @@ This extract re-clusters (ticker, date, close) by a hash of the ticker:
 - sorted by (ticker, date) inside each partition, so parquet row-group
   min/max stats prune to the affected tickers WITHIN a touched bucket;
 - a parquet bloom filter on ticker for point-lookup row-group skipping
-  (min/max is weak when a bucket holds many tickers).
+  (min/max is weak when a bucket holds many tickers) in the files the full
+  build writes; a daily append's files are too small to need one.
 
 Reads collect the (small) affected-ticker set and filter with literal
 predicates — ``tb IN (...)`` prunes directories, ``ticker IN (...)``
@@ -28,7 +29,7 @@ bar) replaces exactly its (tb, ticker, date) keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tickerlake_spark.storage import read_table, table_exists, write_table
@@ -49,11 +50,14 @@ __all__ = [
 N_TICKER_BUCKETS = 64
 
 
+def _bucket_of(ticker: Column, n: int = N_TICKER_BUCKETS) -> Column:
+    """The hash bucket of ``ticker`` (stable across runs: xxhash64)."""
+    return F.pmod(F.xxhash64(ticker), F.lit(n)).cast("int")
+
+
 def with_ticker_bucket(df: DataFrame, n: int = N_TICKER_BUCKETS) -> DataFrame:
-    """Add the hash-bucket column ``tb`` (stable across runs: xxhash64)."""
-    return df.withColumn(
-        "tb", F.pmod(F.xxhash64("ticker"), F.lit(n)).cast("int")
-    )
+    """Add the hash-bucket column ``tb``."""
+    return df.withColumn("tb", _bucket_of(F.col("ticker"), n))
 
 
 def _extract_frame(daily: DataFrame) -> DataFrame:
@@ -65,7 +69,10 @@ def write_closes_extract(
 ) -> None:
     """(Re)build or append the extract. One shuffle on tb clusters whole
     buckets per task; the within-partition sort restores (ticker, date)
-    row-group locality."""
+    row-group locality. Only a rebuild writes the ticker bloom filter: an
+    appended file holds one day's rows, so its ticker min/max already
+    prunes, and a filter sized for the whole universe would outweigh the
+    rows it indexes (compaction rewrites those files without one too)."""
     ext = (
         _extract_frame(daily)
         .repartition("tb")
@@ -76,7 +83,7 @@ def write_closes_extract(
         path,
         mode=mode,
         partition_by="tb",
-        bloom_cols={"ticker": 16_384},
+        bloom_cols={"ticker": 16_384} if mode == "overwrite" else None,
         # small row groups: the read path prunes on ticker min/max + bloom
         # PER ROW GROUP, and a bucket compressed into one 128 MB group
         # defeats that — 16 MB groups keep each one a narrow sorted ticker
@@ -124,21 +131,13 @@ def read_closes_for(
     ``affected`` must already be collected (the caller owns the bound — the
     stair-step affected set is HVC-event tickers, ~2% of the universe). The
     two literal filters do the pruning: ``tb IN`` at the directory level,
-    ``ticker IN`` at the parquet row-group level (stats + bloom).
+    ``ticker IN`` at the parquet row-group level (stats + bloom). The
+    buckets are bucket expressions over ticker literals, which the
+    optimizer folds to constants before partition pruning — no Spark job.
     """
     if not table_exists(path, fs=fs):
         raise FileNotFoundError(path)
-    buckets = sorted(
-        {
-            r[0]
-            for r in with_ticker_bucket(
-                spark.createDataFrame([(t,) for t in affected], "ticker string")
-            )
-            .select("tb")
-            .distinct()
-            .collect()
-        }
-    )
+    buckets = [_bucket_of(F.lit(t)) for t in affected]
     return (
         read_table(spark, path, fs=fs)
         .filter(F.col("tb").isin(buckets) & F.col("ticker").isin(affected))

@@ -18,10 +18,12 @@ only what one batch of bars can actually change:
   inside it, so only buckets from the one containing the day before the
   batch onward can change (``affected_resample``).
 
-Forward batches append; replays upsert: daily rows of a batch past the
-watermark land via append (strictly-new keys), everything else — changed
-buckets, replayed or late rows — via ``storage.upsert_table`` MERGE, never a
-full-table rewrite of unrelated rows.
+Daily rows of a batch past the watermark land via append (strictly-new
+keys); replayed or late daily rows via ``storage.upsert_table`` MERGE. The
+weekly/monthly tables take a range replace: ``affected_resample`` covers
+every ticker's rows in every bucket from the one holding the day before the
+batch on, so one dynamic partition overwrite of those buckets commits them —
+never a full-table rewrite of unrelated rows.
 """
 
 from __future__ import annotations
@@ -44,8 +46,10 @@ CONTEXT_ROWS = 200
 def affected_resample(daily: DataFrame, period: str, since: dt.date) -> DataFrame:
     """Re-resampled ``period`` bars for every bucket that new daily rows with
     ``date > since`` can touch: the bucket containing ``since`` (a mid-bucket
-    append changes its open-bucket row) and everything later. Upsert the
-    result on (ticker, date) — earlier buckets are untouched by construction.
+    append changes its open-bucket row) and everything later, for every
+    ticker. The result holds every row of those buckets, so a dynamic
+    partition overwrite commits it — earlier buckets are untouched by
+    construction.
     """
     bucket_start = F.date_trunc(
         {"week": "week", "month": "month"}[period], F.lit(since).cast("date")

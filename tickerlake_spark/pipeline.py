@@ -587,7 +587,7 @@ def apply_silver_delta(
     earliest date the batch can change. Only what the batch can change is
     recomputed: rolling windows and resample buckets straddle ``since``,
     but the straddle is FINITE (200 rows / one bucket), so that slice is
-    recomputed and merged, never the whole table (the reference's "append"
+    recomputed and committed, never the whole table (the reference's "append"
     recomputes every indicator/resample table from full history,
     silver/main.py:133-233).
 
@@ -597,8 +597,17 @@ def apply_silver_delta(
     other batch — a replay, late data, a re-delivered snapshot delta —
     upserts them on (ticker, date); a batch any of whose rows already
     landed can never look forward, so replays converge. So does the first
-    batch of an empty lake, whose upserts create the tables. Resample
-    tables always upsert from the bucket holding the day before ``since``.
+    batch of an empty lake, whose upserts create the tables.
+
+    The weekly/monthly tables take a RANGE REPLACE instead: one dynamic
+    partition overwrite of every bucket from the one holding the day
+    before ``since`` on. The recompute re-resamples ALL tickers' stored
+    daily rows from that bucket on and recomputes the indicators of every
+    resulting row, so it holds every stored partition in the range: silver
+    daily rows are never deleted outside a full rewrite (a universe or
+    splits change forces one). It reads ``daily_aggregates`` and the tail
+    tables, never the table it overwrites. Forward batches, replays and
+    late data all take it.
 
     Window CONTEXT comes from the per-grain indicator-tail state tables
     (operators/indicator_state) when there are ``checkpoints``, the batch
@@ -606,12 +615,17 @@ def apply_silver_delta(
     205) reads, independent of history depth. Otherwise it is ONE
     horizon-pruned ``build_tail`` over the history before the cutoff,
     persisted because it feeds both the indicator recompute and the
-    advanced tail. With ``checkpoints`` the advanced tails are swapped in
-    and ``silver_tail_as_of`` is committed only after ALL three swaps: a
-    crash mid-way leaves a mismatched as_of and the next batch falls back
-    and rebuilds. A non-forward batch without ``checkpoints`` drops the
-    stored tails instead: it changes rows they may hold while their as_of
-    still matches the watermark.
+    advanced tail. The daily-indicator, weekly and monthly chains run
+    concurrently, each swapping its own advanced tail last; with
+    ``checkpoints``, ``silver_tail_as_of`` is committed only after ALL
+    three chains: a crash mid-way leaves a mismatched as_of and the next
+    batch falls back and rebuilds. A crash that lands the weekly/monthly
+    range but not ``daily_indicators`` leaves the lagging watermark (see
+    ``_rewrite_gate``) at the day before, so the retry takes the upsert
+    arm for the daily tables and range-replaces the buckets again. A
+    non-forward batch without ``checkpoints`` drops the stored tails
+    instead: it changes rows they may hold while their as_of still
+    matches the watermark.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -643,8 +657,8 @@ def apply_silver_delta(
         for p in tail_paths.values():
             drop_table(p, fs=catalog.fs)
 
-    def _merge(table: str, df: DataFrame, *, append: bool) -> None:
-        if append:
+    def _merge(table: str, df: DataFrame) -> None:
+        if forward:
             write_table(
                 df, catalog.silver(table), mode="append", partition_by="date",
                 fs=catalog.fs,
@@ -661,9 +675,18 @@ def apply_silver_delta(
                 fs=catalog.fs,
             )
 
-    _merge("daily_aggregates", adjusted, append=forward)
+    def _replace_range(table: str, df: DataFrame) -> None:
+        write_table(
+            df, catalog.silver(table), partition_by="date", dynamic=True,
+            fs=catalog.fs,
+        )
+
+    _merge("daily_aggregates", adjusted)
     timer.mark("daily_aggregates")
     full_daily = read_table(spark, daily_path, fs=catalog.fs)
+    # daily_aggregates is final here (the chains below touch only the
+    # other tables), so the next-watermark probe runs now
+    new_wm = get_max_date(spark, daily_path, fs=catalog.fs)
 
     persisted_ctx = []
 
@@ -683,12 +706,26 @@ def apply_silver_delta(
         persisted_ctx.append(built)
         return built
 
-    new_tails = {}
-    prev = since - dt.timedelta(days=1)
-
-    def _tail_swap(grain: str) -> None:
+    def _tail_swap(grain: str, ctx: DataFrame, delta: DataFrame) -> None:
+        if checkpoints is None:
+            return
         with timer.span("indicator_tails"):
-            replace_tail(spark, new_tails[grain], tail_paths[grain], fs=catalog.fs)
+            replace_tail(
+                spark, advance_tail(ctx, delta), tail_paths[grain], fs=catalog.fs
+            )
+
+    def _daily_chain() -> None:
+        delta_daily = full_daily.filter(F.col("date") >= F.lit(since))  # pruned
+        with timer.span("daily_indicators"):
+            ctx = context_tail("daily", daily_path, since, 600)
+            new_ind = indicators_from_tail(ctx, delta_daily, since)
+            _merge(
+                "daily_indicators",
+                schemas.conform(new_ind, schemas.INDICATORS).repartition("date"),
+            )
+        _tail_swap("daily", ctx, delta_daily)
+
+    prev = since - dt.timedelta(days=1)
 
     def _resampled_chain(period: str, agg_table: str, ind_table: str,
                          horizon: int) -> None:
@@ -697,55 +734,32 @@ def apply_silver_delta(
         # horizon makes (build_tail docstring): 400 weekly buckets = 2,800
         # days, 400 monthly = 12,200. Only scanned when the tails are
         # invalid — the steady state reads the tail tables.
-        _merge(
+        _replace_range(
             agg_table,
             schemas.conform(
                 affected_resample(full_daily, period, prev), schemas.AGGREGATES
             ),
-            append=False,
         )
         bucket_since = _bucket_start(period, prev)
         ctx = context_tail(period, catalog.silver(agg_table), bucket_since, horizon)
         # the recomputed rows exactly as stored, via a partition-pruned
-        # read-back of the touched bucket partitions (no lineage rerun)
+        # read-back of the replaced bucket partitions (no lineage rerun)
         delta_stored = read_table(
             spark, catalog.silver(agg_table), fs=catalog.fs
         ).filter(F.col("date") >= F.lit(bucket_since))
         ind_delta = indicators_from_tail(ctx, delta_stored, bucket_since)
-        _merge(
-            ind_table, schemas.conform(ind_delta, schemas.INDICATORS), append=False
-        )
-        if checkpoints is not None:
-            new_tails[period] = advance_tail(ctx, delta_stored)
-            _tail_swap(period)
+        _replace_range(ind_table, schemas.conform(ind_delta, schemas.INDICATORS))
+        _tail_swap(period, ctx, delta_stored)
 
     try:
-        delta_daily = full_daily.filter(F.col("date") >= F.lit(since))  # pruned
-        ctx_daily = context_tail("daily", daily_path, since, 600)
-        new_ind = indicators_from_tail(ctx_daily, delta_daily, since)
-        _merge(
-            "daily_indicators",
-            schemas.conform(new_ind, schemas.INDICATORS).repartition("date"),
-            append=forward,
-        )
-        new_tails["daily"] = advance_tail(ctx_daily, delta_daily)
-        timer.mark("daily_indicators")
-
-        # daily_aggregates is final here (the resampled chains touch only
-        # weekly/monthly tables), so the next-watermark probe runs now
-        new_wm = get_max_date(spark, daily_path, fs=catalog.fs)
-        # the weekly and monthly chains touch disjoint tables and read only
-        # already-written daily state — run them concurrently (the merge
-        # primitives use writer-level overwrite options; no shared session
-        # state), overlapping their fixed per-job overheads. The tail swaps
-        # overlap too: each grain's swap depends only on its own chain, so
-        # the daily swap rides the pool and each resampled chain swaps its
-        # own tail last.
+        # the three chains touch disjoint tables and read only the
+        # already-written daily_aggregates (plus each grain's own
+        # aggregates and tail) — run them concurrently (the writers use
+        # writer-level overwrite options; no shared session state),
+        # overlapping their fixed per-job overheads
         with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = []
-            if checkpoints is not None:
-                futs.append(pool.submit(_tail_swap, "daily"))
-            futs += [
+            futs = [
+                pool.submit(_daily_chain),
                 pool.submit(
                     _resampled_chain, "week", "weekly_aggregates",
                     "weekly_indicators", 2_800,

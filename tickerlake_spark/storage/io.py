@@ -109,7 +109,11 @@ def write_table(
 
     ``dynamic=True`` (with mode=overwrite and partition_by) overwrites only
     the partitions present in ``df`` — incremental daily loads rewrite one
-    ``date=.../`` directory, not the whole dataset.
+    ``date=.../`` directory, not the whole dataset. A target still in the
+    flat zero-row layout (the empty-frame fallback below) is replaced by a
+    full partitioned overwrite instead: partition dirs written beside its
+    root file would make the table unreadable. A flat target that holds
+    rows raises ``ValueError``.
 
     ``bloom_cols`` maps column -> expected distinct count and writes a
     Parquet bloom filter per row group for those columns. Min/max stats are
@@ -120,6 +124,16 @@ def write_table(
     """
     if mode not in _VALID_MODES:
         raise ValueError(f"mode must be one of {_VALID_MODES}, got {mode!r}")
+    if partition_by and dynamic and mode == "overwrite":
+        flat = _root_data_files(path, fs=fs)
+        if any(parquet_footer_metadata(f, fs=fs).num_rows for f in flat):
+            raise ValueError(
+                f"table {path!r} holds rows in a flat layout: a dynamic "
+                f"partition overwrite on {partition_by!r} cannot replace them"
+            )
+        # a zero-row flat file is the fallback below: a full partitioned
+        # overwrite replaces it
+        dynamic = not flat
     writer = df.write.mode(mode)
     if partition_by:
         cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
@@ -283,6 +297,22 @@ def _data_files(path: str, fs: FS = LOCAL_FS) -> Iterator[str]:
         for f in sorted(fnames):
             if f.endswith(".parquet") and not f.startswith(("_", ".")):
                 yield f"{r.rstrip('/')}/{f}"
+
+
+def _root_data_files(path: str, fs: FS = LOCAL_FS) -> list[str]:
+    """Data files directly under the table root: the flat layout. One
+    listing; a Hive-layout table has none (its files sit in partition
+    dirs)."""
+    if not fs.isdir(path):
+        return []
+    base = path.rstrip("/")
+    return [
+        f"{base}/{f}"
+        for f in sorted(fs.listdir(path))
+        if f.endswith(".parquet")
+        and not f.startswith(("_", "."))
+        and fs.isfile(f"{base}/{f}")
+    ]
 
 
 def parquet_stats_max(path: str, column: str, fs: FS = LOCAL_FS):

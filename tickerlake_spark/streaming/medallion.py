@@ -13,12 +13,14 @@ date onward. With gold enabled the batch then goes to
 ``pipeline.apply_gold_delta``, the one incremental gold path ``run_gold``
 runs too.
 
-Delivery semantics: forward batches append; replays upsert. A batch is
-forward only when every bar lies past the stored watermark, so its keys are
-new; a replayed micro-batch (crash between sink and checkpoint commit) has
-already landed rows, fails that test, and merges byte-identical recomputed
-rows on (ticker, date) — effectively-once without a transactional sink, the
-standard foreachBatch idempotency contract.
+Delivery semantics: the daily tables append forward batches and upsert
+replays; the weekly/monthly tables range-replace their recomputed buckets
+either way. A batch is forward only when every bar lies past the stored
+watermark, so its keys are new; a replayed micro-batch (crash between sink
+and checkpoint commit) has already landed rows, fails that test, and merges
+byte-identical recomputed rows on (ticker, date), while the range replace
+rewrites the same buckets with the same rows — effectively-once without a
+transactional sink, the standard foreachBatch idempotency contract.
 
 Scale posture: the per-batch work is O(batch + bounded context), never
 O(history); the file source's ``maxFilesPerTrigger`` bounds batch size, and
@@ -64,8 +66,9 @@ def silver_consume_snapshot(
     - an UPSERT commit (a corrected historical bar) re-delivers the
       rewritten files' rows — at-least-once on rewritten keys, which is
       safe here BY CONSTRUCTION: such a delta is not forward (its dates
-      are at or behind the watermark), so ``apply_silver_delta`` merges its
-      deterministic slices through (ticker, date)-keyed upserts —
+      are at or behind the watermark), so ``apply_silver_delta`` upserts
+      its daily slices on (ticker, date) and range-replaces the weekly/
+      monthly buckets from the one before its earliest date —
       re-delivered unchanged rows converge to the identical silver tables
       while the corrected rows propagate through every indicator/resample
       window that straddles them (horizon-built context, not the tails).
@@ -98,7 +101,8 @@ def silver_maintenance_batch(
 ) -> None:
     """Apply one micro-batch of raw bronze bars to every silver table.
 
-    Idempotent: forward batches append, replays upsert (see
+    Idempotent: the daily tables append forward batches and upsert
+    replays, the weekly/monthly tables range-replace their buckets (see
     ``pipeline.apply_silver_delta``). Callable directly (batch backfill) or
     from the streaming sink. With the lake's ``checkpoints`` store the
     batch uses and maintains the same indicator-tail state as the batch
