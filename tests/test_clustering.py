@@ -268,3 +268,30 @@ def test_oversized_cell_guard_splits_hot_cell_keeps_recall(spark, sf_dir):
         sub.groupBy("cell", "b").count().agg(F.max("count")).first()[0]
     )
     assert max_group <= 25, f"hot-cell bucket groups stay small, got {max_group}"
+
+
+class _StatsRaise:
+    """A stand-in ``_jdf`` whose plan-statistics call fails, as a private
+    JVM API that changed or broke would."""
+
+    def queryExecution(self):
+        return self
+
+    def optimizedPlan(self):
+        return self
+
+    def stats(self):
+        raise RuntimeError("plan statistics unavailable")
+
+
+def test_trainer_width_falls_back_to_full_width(spark, monkeypatch):
+    """``_trainer_width`` sizes by the optimizer's byte estimate, read
+    through a private JVM API; when that read fails it returns the full
+    ``defaultParallelism`` width, the safe direction at scale."""
+    from tickerlake_spark.operators.clustering import _trainer_width
+
+    df = spark.range(10)
+    width = spark.sparkContext.defaultParallelism
+    assert _trainer_width(df) == 1  # 10 rows: well under 1 MiB per task
+    monkeypatch.setattr(df, "_jdf", _StatsRaise())
+    assert _trainer_width(df) == width

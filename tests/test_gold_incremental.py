@@ -106,6 +106,38 @@ def test_closes_extract_bloom_filter_only_on_rebuild(spark, tmp_path):
     assert appended and max(appended.values()) < 8_192, appended
 
 
+def test_compacted_closes_bucket_keeps_the_bloom_filter(spark, tmp_path):
+    """Compaction rewrites an overfull bucket with the rebuild's writer
+    settings: the compacted file carries the ticker bloom filter (tens of
+    KB). The tickers share one bucket and are all distinct, which keeps the
+    ticker column chunk plain-encoded: parquet-mr writes no bloom filter
+    for a chunk that is wholly dictionary-encoded."""
+    from tickerlake_spark.operators.closes import (
+        append_closes_extract,
+        with_ticker_bucket,
+        write_closes_extract,
+    )
+
+    names = spark.range(2_000).select(
+        F.concat(F.lit("T"), F.col("id").cast("string")).alias("ticker")
+    )
+    same_bucket = [
+        r[0] for r in with_ticker_bucket(names).filter("tb = 0").limit(9).collect()
+    ]
+    path = str(tmp_path / "closes")
+    for i, batch in enumerate((same_bucket[:3], same_bucket[3:6], same_bucket[6:])):
+        delta = _bars(spark, [(t, D(2024, 1, 2 + i), 10.0, 100) for t in batch])
+        if i == 0:
+            write_closes_extract(delta, path)
+        else:
+            append_closes_extract(spark, delta, path, max_files_per_partition=2)
+    bucket = os.path.join(path, "tb=0")
+    (compacted,) = [f for f in os.listdir(bucket) if f.endswith(".parquet")]
+    assert os.path.getsize(os.path.join(bucket, compacted)) > 16_384
+    got = sorted(r["ticker"] for r in spark.read.parquet(path).collect())
+    assert got == sorted(same_bucket)
+
+
 def test_closes_extract_append_then_compact(spark, tmp_path):
     from tickerlake_spark.operators.closes import (
         append_closes_extract,

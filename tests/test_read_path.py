@@ -2,7 +2,9 @@
 Hive-layout reads pin their schema from the Parquet footer instead of
 running Spark's schema-inference job, and read exactly what a plain
 inferred ``spark.read.parquet`` reads. Also pins the silver rewrite gate's
-fingerprints being computed once per run.
+fingerprints being computed once per run, and the catalog's test-table
+reads (``plans/catalog.load_table``): a repeated read of an unchanged file
+reuses the schema Spark inferred on the first one.
 """
 
 from __future__ import annotations
@@ -10,15 +12,19 @@ from __future__ import annotations
 import collections
 import datetime as dt
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
 
 from test_pipeline import _bars_for, _source
 from tickerlake_spark import pipeline
 from tickerlake_spark.pipeline import run_bronze, run_gold, run_silver
+from tickerlake_spark.plans.catalog import load_table
+from tickerlake_spark.session import get_spark
 from tickerlake_spark.sources.calendar import trading_days
 from tickerlake_spark.storage import Catalog, Checkpoints, read_table, table_exists
 from tickerlake_spark.storage.io import detect_partition_column, footer_schema
@@ -199,3 +205,53 @@ def test_silver_fingerprints_computed_once_per_append(spark, lake):
     assert cp.get(
         "silver_universe_fingerprint"
     ) == pipeline._universe_fingerprint(spark, cat)
+
+
+def test_warm_load_table_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """The first catalog read of a file runs Spark's inference job; every
+    later read of it starts none and has the inferred schema."""
+    shutil.copy(os.path.join(sf_dir, "lineitem.parquet"), tmp_path)
+    d = str(tmp_path)
+    assert _jobs_in_group(spark, lambda: load_table(spark, d, "lineitem")) != []
+    assert _jobs_in_group(spark, lambda: load_table(spark, d, "lineitem")) == []
+    inferred = spark.read.parquet(os.path.join(d, "lineitem.parquet"))
+    assert load_table(spark, d, "lineitem").schema == inferred.schema
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), p)
+    assert load_table(spark, str(tmp_path), "t").dtypes == [("a", "bigint")]
+    pq.write_table(
+        pa.table({"b": ["x", "y", "z"], "a": pa.array([1.5, 2.5, 3.5])}), p
+    )
+    got = load_table(spark, str(tmp_path), "t")
+    assert got.dtypes == [("b", "string"), ("a", "double")]
+    assert sorted(got.collect()) == sorted(spark.read.parquet(p).collect())
+
+
+def test_events_ts_loads_as_timestamp_ntz_cold_and_warm(spark, sf_dir, tmp_path):
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+    for _ in ("cold", "warm"):
+        ts = dict(load_table(spark, str(tmp_path), "events").dtypes)["ts"]
+        assert ts == "timestamp_ntz"
+
+
+_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_get_spark_turns_origin_capture_off(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get(_DEBUGGING) == "false"
+    assert not is_debugging_enabled()
+
+
+def test_extra_conf_turns_origin_capture_back_on(monkeypatch):
+    """The flag is a static conf, so only a new session can take it; check
+    the options ``get_spark`` hands the builder instead of building one."""
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    assert get_spark()[_DEBUGGING] == "false"
+    assert get_spark(extra_conf={_DEBUGGING: "true"})[_DEBUGGING] == "true"

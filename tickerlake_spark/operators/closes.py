@@ -15,7 +15,8 @@ This extract re-clusters (ticker, date, close) by a hash of the ticker:
   min/max stats prune to the affected tickers WITHIN a touched bucket;
 - a parquet bloom filter on ticker for point-lookup row-group skipping
   (min/max is weak when a bucket holds many tickers) in the files the full
-  build writes; a daily append's files are too small to need one.
+  build and compaction write; a daily append's files are too small to need
+  one.
 
 Reads collect the (small) affected-ticker set and filter with literal
 predicates — ``tb IN (...)`` prunes directories, ``ticker IN (...)``
@@ -49,6 +50,14 @@ __all__ = [
 # wastes little, large enough that directory listings stay trivial.
 N_TICKER_BUCKETS = 64
 
+# Writer settings of a rebuild, which compaction reuses for the buckets it
+# rewrites. Small row groups: the read path prunes on ticker min/max + bloom
+# PER ROW GROUP, and a bucket compressed into one 128 MB group defeats that —
+# 16 MB groups keep each one a narrow sorted ticker range, so an In-filter
+# over the affected set skips precisely.
+_BLOOM_COLS = {"ticker": 16_384}
+_OPTIONS = {"parquet.block.size": str(16 * 1024 * 1024)}
+
 
 def _bucket_of(ticker: Column, n: int = N_TICKER_BUCKETS) -> Column:
     """The hash bucket of ``ticker`` (stable across runs: xxhash64)."""
@@ -72,7 +81,8 @@ def write_closes_extract(
     row-group locality. Only a rebuild writes the ticker bloom filter: an
     appended file holds one day's rows, so its ticker min/max already
     prunes, and a filter sized for the whole universe would outweigh the
-    rows it indexes (compaction rewrites those files without one too)."""
+    rows it indexes. Compaction folds them back into files written with
+    the rebuild's settings, filter included."""
     ext = (
         _extract_frame(daily)
         .repartition("tb")
@@ -83,12 +93,8 @@ def write_closes_extract(
         path,
         mode=mode,
         partition_by="tb",
-        bloom_cols={"ticker": 16_384} if mode == "overwrite" else None,
-        # small row groups: the read path prunes on ticker min/max + bloom
-        # PER ROW GROUP, and a bucket compressed into one 128 MB group
-        # defeats that — 16 MB groups keep each one a narrow sorted ticker
-        # range, so an In-filter over the affected set skips precisely
-        options={"parquet.block.size": str(16 * 1024 * 1024)},
+        bloom_cols=_BLOOM_COLS if mode == "overwrite" else None,
+        options=_OPTIONS,
         fs=fs,
     )
 
@@ -116,6 +122,8 @@ def append_closes_extract(
         path,
         max_files_per_partition=max_files_per_partition,
         sort_by=["ticker", "date"],
+        bloom_cols=_BLOOM_COLS,
+        options=_OPTIONS,
         fs=fs,
     )
 

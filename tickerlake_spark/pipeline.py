@@ -1179,7 +1179,12 @@ def apply_gold_delta(
     timer.mark("extract+hvc_parallel")
 
     if aff_list:
-        affected = spark.createDataFrame([(t,) for t in aff_list], "ticker string")
+        # built on the JVM from literals: a createDataFrame over a Python
+        # list is a Python RDD, and each of its three scans (the semi-join
+        # and both replace_keys) would start Python workers
+        affected = spark.range(1).select(
+            F.explode(F.array(*map(F.lit, aff_list))).alias("ticker")
+        )
         aff_events = read_table(spark, hvc_path, fs=catalog.fs).join(
             F.broadcast(affected), "ticker", "left_semi"
         )

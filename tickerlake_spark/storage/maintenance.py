@@ -36,7 +36,7 @@ import uuid
 from pyspark.sql import SparkSession
 
 from tickerlake_spark.storage.fs import FS, LOCAL_FS
-from tickerlake_spark.storage.io import read_table
+from tickerlake_spark.storage.io import read_table, write_table
 
 __all__ = [
     "compact_table",
@@ -289,6 +289,8 @@ def compact_partition_dirs(
     max_files_per_partition: int = 16,
     sort_by: list[str] | None = None,
     target_file_bytes: int = 128 * 1024 * 1024,
+    bloom_cols: dict[str, int] | None = None,
+    options: dict[str, str] | None = None,
     fs: FS = LOCAL_FS,
 ) -> dict:
     """Compact ONLY the partition directories of a Hive-partitioned table
@@ -302,6 +304,9 @@ def compact_partition_dirs(
     run is finished first). Untouched partitions are never read: the
     maintenance cost tracks append churn, not table size — the right shape
     for incremental extracts that append a small delta per run.
+
+    ``bloom_cols`` and ``options`` are ``write_table``'s: pass the table's
+    own writer settings so a compacted partition keeps them.
     """
     repair_partition_swaps(path, fs=fs)
     compacted, skipped = 0, 0
@@ -327,7 +332,7 @@ def compact_partition_dirs(
         # 'tb=3__compact_x' name would read as tb='3__compact_x' and either
         # duplicate rows or break partition-type inference)
         tmp = f"{path.rstrip('/')}/_compact_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
+        write_table(df, tmp, bloom_cols=bloom_cols, options=options, fs=fs)
         swap_partition_dir(path, d, tmp, fs=fs)
         compacted += 1
     return {"compacted_partitions": compacted, "skipped_partitions": skipped}
